@@ -48,13 +48,14 @@ def test_minhash_lsh_finds_near_dups(docs):
 
 def test_simhash_near_pairs(docs):
     from universal_importer_duckdb_spark.operators.dedup_text import (
-        simhash_64,
-        simhash_near_pairs,
+        simhash_32x2_portable,
+        simhash_near_pairs_portable,
     )
 
-    fps = {r.doc_id: r.simhash for r in simhash_64(docs).collect()}
+    fps = {r.doc_id: (r.fp_lo, r.fp_hi) for r in simhash_32x2_portable(docs).collect()}
     assert fps[0] == fps[2]
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_pairs(docs, max_hamming=16).collect()}
+    pairs = {(r.id_a, r.id_b): r.hamming
+             for r in simhash_near_pairs_portable(docs, max_hamming=16).collect()}
     assert pairs.get((0, 2)) == 0
     assert (0, 1) in pairs
 
@@ -201,18 +202,20 @@ def test_rolling_fingerprint_robust_to_distant_edit(spark):
     assert not set(rows[1].rolling_fingerprint) & set(rows[3].rolling_fingerprint)
 
 
-def test_simhash_portable_pandas_matches_expr(spark, sf_dir):
+def test_simhash_portable_kernel_matches_fp_columns(spark, sf_dir):
     """The Arrow-batched numpy fingerprint kernel must be bit-identical
-    to the pure-expression path (same md5-half bit votes)."""
+    to the column-expression form ``simhash_fp_columns`` (same md5-half
+    bit votes)."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_32x2_portable,
+        simhash_fp_columns,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     a = {r.doc_id: (r.fp_lo, r.fp_hi)
-         for r in simhash_32x2_portable(docs, impl="pandas").collect()}
+         for r in simhash_32x2_portable(docs).collect()}
     b = {r.doc_id: (r.fp_lo, r.fp_hi)
-         for r in simhash_32x2_portable(docs, impl="expr").collect()}
+         for r in simhash_fp_columns(docs).collect()}
     assert a == b and len(a) > 0
 
 
@@ -388,23 +391,23 @@ def test_bucket_pairs_matches_naive_self_join(spark):
     from universal_importer_duckdb_spark.operators.dedup_text import bucket_pairs
 
     rng = random.Random(11)
-    rows = [(i, rng.randrange(8), 100 + i) for i in range(200)]
-    df = spark.createDataFrame(rows, "id bigint, b int, payload bigint")
+    rows = [(i, rng.randrange(8)) for i in range(200)]
+    df = spark.createDataFrame(rows, "id bigint, b int")
 
     got = {
-        (r.id_a, r.id_b, r.payload_a, r.payload_b)
-        for r in bucket_pairs(df, ["b"], "id", max_bucket_size=1000, payload_col="payload").collect()
+        (r.id_a, r.id_b)
+        for r in bucket_pairs(df, ["b"], "id", max_bucket_size=1000).collect()
     }
     naive = {
-        (i, j, 100 + i, 100 + j)
-        for (i, bi, _) in rows
-        for (j, bj, _) in rows
+        (i, j)
+        for (i, bi) in rows
+        for (j, bj) in rows
         if i < j and bi == bj
     }
     assert got == naive
     # bucket-size cap drops oversized buckets entirely
     sizes = {}
-    for _, b, _ in rows:
+    for _, b in rows:
         sizes[b] = sizes.get(b, 0) + 1
     expected = sum(1 for s in sizes.values() if s == 2)
     assert bucket_pairs(df, ["b"], "id", max_bucket_size=2).count() == expected

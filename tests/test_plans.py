@@ -345,17 +345,23 @@ def test_bloom_probe_broadcasts_bitmap(spark, sf_dir):
 
 def test_admission_funnel_plan_shape(spark, sf_dir):
     """The three-gate funnel (r8): no cartesian anywhere; the quality
-    gate stays a JVM literal-map fold (no Python rows beyond the two
-    Arrow-batched centroid assignments and the per-cluster prune);
-    scans prune to the columns each gate needs."""
+    gate stays a JVM literal-map fold; scans prune to the columns each
+    gate needs. The entry runs with ``held=True``, so the at-rest side
+    — the at-rest centroid assignment (a MapInPandas) and the
+    per-cluster semdedup prune (a FlatMapGroupsInPandas) — is built
+    once by an eager localCheckpoint and the plan reads it back as a
+    ``Scan ExistingRDD``. What stays in the plan is the arriving
+    batch's centroid assignment and the cogrouped admission kernel."""
     plan = _plan(
         eq.REGISTRY["docs_multisignal_admission"][0](spark, sf_dir)
     )
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     # formatted explain prints each node twice (tree + detail)
-    assert plan.count("MapInPandas") == 4  # arriving + at-rest assign
-    assert plan.count("FlatMapGroupsInPandas") == 2  # semdedup prune
+    assert plan.count("MapInPandas") == 2  # arriving assign only
+    assert plan.count("FlatMapGroupsInPandas") == 0  # prune is held
+    assert plan.count("FlatMapCoGroupsInPandas") == 2  # admission kernel
+    assert "Scan ExistingRDD" in plan  # the held kept-member frame
     # documents scans read only (doc_id, text); the quantize-side
     # embeddings scan must not read the unused label column
     for line in plan.splitlines():

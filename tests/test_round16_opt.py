@@ -1,12 +1,15 @@
 """Round-16 optimization invariants: the simhash pair-expansion Arrow
-kernel and the batch-dedup fingerprint kernel must be bit-identical to
-the expression forms they replace (the admission-kernel playbook —
-every kernel swap ships with a live differential oracle on real data),
-and the q9 flat-broadcast revision must keep its exact fixed-point
+kernel must equal a brute-force Python reference over the same
+fingerprints, and the batch-dedup fingerprint kernel must be
+bit-identical to the column-expression form ``simhash_fp_columns``
+(every kernel keeps a live differential oracle on real data), and the q9 flat-broadcast revision must keep its exact fixed-point
 semantics (covered by tests/test_oracle_parity.py; the plan-shape
 claim lives in plans/r16)."""
 
 from __future__ import annotations
+
+import collections
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,9 +19,33 @@ def _pairs(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_simhash_pair_kernel_matches_expr_on_real_data(spark, sf_dir):
+def _bruteforce_pairs(docs, max_hamming, max_bucket_size=200):
+    """Reference for ``simhash_near_pairs_portable`` given its
+    fingerprints: group the collected (fp_lo, fp_hi) by (chunk, 16-bit
+    key), drop buckets outside [2, max_bucket_size], and keep the
+    distinct (min id, max id, hamming) pairs within max_hamming."""
+    from universal_importer_duckdb_spark.operators.dedup_text import (
+        simhash_32x2_portable,
+    )
+
+    buckets = collections.defaultdict(list)
+    for i, lo, hi in simhash_32x2_portable(docs).collect():
+        for c, key in enumerate((lo, lo >> 16, hi, hi >> 16)):
+            buckets[(c, key & 0xFFFF)].append((i, lo, hi))
+    out = set()
+    for members in buckets.values():
+        if not 2 <= len(members) <= max_bucket_size:
+            continue
+        for (a, la, ha), (b, lb, hb) in itertools.combinations(members, 2):
+            h = bin(la ^ lb).count("1") + bin(ha ^ hb).count("1")
+            if h <= max_hamming:
+                out.add((min(a, b), max(a, b), h))
+    return sorted(out)
+
+
+def test_simhash_pair_kernel_matches_bruteforce_on_real_data(spark, sf_dir):
     """Full row-set equality (ids, hamming, multiplicity) between the
-    Arrow pair kernel and the interpreted HOF expansion on the real
+    Arrow pair kernel and the brute-force reference on the real
     certification corpus."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_near_pairs_portable,
@@ -26,17 +53,14 @@ def test_simhash_pair_kernel_matches_expr_on_real_data(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     kern = _pairs(simhash_near_pairs_portable(docs, max_hamming=8))
-    expr = _pairs(
-        simhash_near_pairs_portable(docs, max_hamming=8, pair_impl="expr")
-    )
-    assert kern == expr and len(kern) > 0
+    assert kern == _bruteforce_pairs(docs, 8) and len(kern) > 0
 
 
 def test_simhash_pair_kernel_hamming_boundary(spark):
-    """Pairs at exactly max_hamming survive; max_hamming+1 is cut —
-    in BOTH implementations. Fingerprints are forced through the real
-    text pipeline by crafting doc pairs with identical token sets
-    except a controlled difference."""
+    """Pairs at exactly max_hamming survive; max_hamming+1 is cut.
+    Fingerprints are forced through the real text pipeline by crafting
+    doc pairs with identical token sets except a controlled
+    difference."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_near_pairs_portable,
     )
@@ -51,10 +75,7 @@ def test_simhash_pair_kernel_hamming_boundary(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     for h in (0, 8):
         kern = _pairs(simhash_near_pairs_portable(docs, max_hamming=h))
-        expr = _pairs(
-            simhash_near_pairs_portable(docs, max_hamming=h, pair_impl="expr")
-        )
-        assert kern == expr
+        assert kern == _bruteforce_pairs(docs, h)
         assert all(r[2] <= h for r in kern)
     assert (1, 2, 0) in _pairs(simhash_near_pairs_portable(docs, max_hamming=0))
 
@@ -62,7 +83,7 @@ def test_simhash_pair_kernel_hamming_boundary(spark):
 def test_simhash_pair_kernel_null_text_and_dup_fps(spark):
     """NULL text fingerprints like '' (the kernel's None -> "" rule);
     many identical fingerprints in one bucket expand to all C(m,2)
-    pairs in both forms."""
+    pairs."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_near_pairs_portable,
     )
@@ -71,38 +92,82 @@ def test_simhash_pair_kernel_null_text_and_dup_fps(spark):
     rows = [(i, same) for i in range(1, 6)] + [(6, None), (7, None)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     kern = _pairs(simhash_near_pairs_portable(docs, max_hamming=8))
-    expr = _pairs(
-        simhash_near_pairs_portable(docs, max_hamming=8, pair_impl="expr")
-    )
-    assert kern == expr
+    assert kern == _bruteforce_pairs(docs, 8)
     # the 5 identical docs yield all 10 pairs at hamming 0
     assert sum(1 for a, b, h in kern if a <= 5 and b <= 5 and h == 0) == 10
     # the two null-text docs pair with each other
     assert (6, 7, 0) in kern
 
 
-def test_simhash_pair_kernel_non_integral_id_falls_back(spark):
-    """String ids cannot enter the numpy kernel; the operator must
-    route them through the expr path and still produce pairs."""
+def test_simhash_pair_kernel_bounded_passes_match_bruteforce(
+    spark, monkeypatch
+):
+    """Skew: many 200-member buckets (the max_bucket_size cap) in one
+    Arrow batch, smaller perturbed buckets, and an all-null-text
+    group, with the pair budget set below two 200-member buckets so
+    every such size class splits into one-bucket passes. The output
+    must still equal the brute-force reference."""
+    from universal_importer_duckdb_spark.operators import dedup_text
+
+    monkeypatch.setattr(dedup_text, "_PAIR_BUDGET", 25_000)
+    rows = []
+    for g in range(6):
+        text = " ".join(f"g{g}w{k}" for k in range(30))
+        rows += [(g * 1000 + j, text) for j in range(200)]
+    for g in (6, 7):
+        text = " ".join(f"g{g}w{k}" for k in range(30))
+        rows += [(g * 1000 + j, f"{text} v{j}") for j in range(120)]
+    rows += [(9000 + j, None) for j in range(150)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    kern = _pairs(dedup_text.simhash_near_pairs_portable(docs, max_hamming=8))
+    assert kern == _bruteforce_pairs(docs, 8)
+    assert len(kern) >= 6 * (200 * 199 // 2)
+
+    nulls = spark.createDataFrame(
+        [(j, None) for j in range(200)], "doc_id bigint, text string"
+    )
+    got = _pairs(dedup_text.simhash_near_pairs_portable(nulls, max_hamming=8))
+    assert got == _bruteforce_pairs(nulls, 8) and len(got) == 200 * 199 // 2
+
+
+def test_simhash_pair_kernel_ids_keep_input_type(spark):
+    """int, bigint and string ids all enter the kernel and come back
+    as id_a/id_b of their own type, ordered id_a < id_b by that type's
+    ordering (strings lexicographically: "10" < "9"). A null id pairs
+    with nothing."""
+    from pyspark.sql import types as T
+
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_near_pairs_portable,
     )
 
     same = "one two three four five six seven eight"
-    docs = spark.createDataFrame(
-        [("a", same), ("b", same)], "doc_id string, text string"
-    )
-    out = simhash_near_pairs_portable(docs, max_hamming=8)
-    rows = {tuple(r) for r in out.collect()}
-    assert rows == {("a", "b", 0)}
+    cases = {
+        "int": ([9, 10, None, 2], {(2, 9, 0), (2, 10, 0), (9, 10, 0)}),
+        "bigint": ([9, 10, None, 2], {(2, 9, 0), (2, 10, 0), (9, 10, 0)}),
+        "string": (["9", "10", None, "2"],
+                   {("10", "2", 0), ("10", "9", 0), ("2", "9", 0)}),
+    }
+    for id_type, (ids, expected) in cases.items():
+        docs = spark.createDataFrame(
+            [(i, same) for i in ids], f"doc_id {id_type}, text string"
+        )
+        out = simhash_near_pairs_portable(docs, max_hamming=8)
+        want = docs.schema["doc_id"].dataType
+        assert out.schema["id_a"].dataType == want, id_type
+        assert out.schema["id_b"].dataType == want, id_type
+        assert out.schema["hamming"].dataType == T.IntegerType()
+        assert {tuple(r) for r in out.collect()} == expected, id_type
 
 
 def test_simhash_fp_kernel_token_dedup_edge_cases(spark):
-    """The batch-dedup fingerprint kernel vs the expression path on
-    adversarial token shapes: empty string, single token repeated,
-    consecutive spaces (empty tokens), null text."""
+    """The batch-dedup fingerprint kernel vs the column-expression
+    form (``simhash_fp_columns``) on adversarial token shapes: empty
+    string, single token repeated, consecutive spaces (empty tokens),
+    null text."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_32x2_portable,
+        simhash_fp_columns,
     )
 
     rows = [
@@ -115,9 +180,9 @@ def test_simhash_fp_kernel_token_dedup_edge_cases(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     a = {r.doc_id: (r.fp_lo, r.fp_hi)
-         for r in simhash_32x2_portable(docs, impl="pandas").collect()}
+         for r in simhash_32x2_portable(docs).collect()}
     b = {r.doc_id: (r.fp_lo, r.fp_hi)
-         for r in simhash_32x2_portable(docs, impl="expr").collect()}
+         for r in simhash_fp_columns(docs).collect()}
     assert a == b and len(a) == 6
     # null text and empty text share the [''] token list -> same fp
     assert a[1] == a[2]

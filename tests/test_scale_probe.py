@@ -137,3 +137,22 @@ def test_merge_passes_empty_new_times_is_identity_on_cells():
     passes, cells = merge_passes(prior, "oracle", {})
     assert passes[1] == [0.3, 0.4]
     assert cells[1] == round((0.3 + 0.4) / 2, 3)
+
+
+def test_build_row_empty_series_is_strict_json():
+    # --side oracle on an entry with no stored Spark history: the
+    # Spark series is empty and its exponent undefined. The row must
+    # carry null there (never NaN) so SCALE_PROBE.json stays strict
+    # JSON; a single-scale oracle series likewise has no exponent.
+    import json
+
+    from scale_probe import build_row
+
+    row = build_row({}, {}, {1: 0.25})
+    assert row["spark_exp"] is None and row["oracle_exp"] is None
+    assert "ratio_last" not in row
+    json.dumps(row, allow_nan=False)
+    json.dumps(build_row({}, {}, {}), allow_nan=False)
+    full = build_row({}, {1: 0.5, 4: 2.0}, {1: 0.25, 4: 0.5})
+    assert full["spark_exp"] == 1.0 and full["ratio_last"] == 4.0
+    json.dumps(full, allow_nan=False)

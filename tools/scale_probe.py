@@ -292,6 +292,38 @@ def _fit_exponent(scales: list[int], times: list[float]) -> float:
     return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
 
 
+def _exp_cell(cells: dict[int, float]) -> float | None:
+    """Rounded exponent fit over a cell dict; None where the fit is
+    undefined (no or one scale), so the artifact stays strict JSON."""
+    xs = sorted(cells)
+    e = _fit_exponent(xs, [cells[s] for s in xs])
+    return round(e, 2) if math.isfinite(e) else None
+
+
+def _num(x: float | None) -> float:
+    return float("nan") if x is None else x
+
+
+def build_row(prior: dict, spark_times: dict, oracle_times: dict) -> dict:
+    """One SCALE_PROBE.json entry row: this invocation's times folded
+    into the per-cell pass histories (r15 pass-median regime — see
+    merge_passes); exponents and ratios recompute on the per-cell
+    MEDIANS' union."""
+    sp, st = merge_passes(prior, "spark", spark_times)
+    op, ot = merge_passes(prior, "oracle", oracle_times)
+    row = {"spark": st, "spark_passes": sp, "spark_exp": _exp_cell(st)}
+    if ot:
+        row.update({"oracle": ot, "oracle_passes": op,
+                    "oracle_exp": _exp_cell(ot)})
+        both = sorted(set(st) & set(ot))
+        if both:  # st can be empty under --side oracle (r15 advice)
+            row.update({
+                "ratio_first": round(st[both[0]] / ot[both[0]], 2),
+                "ratio_last": round(st[both[-1]] / ot[both[-1]], 2),
+            })
+    return row
+
+
 def time_spark(entries, dirs, runs: int):
     from universal_importer_duckdb_spark import entry_queries as eq
     from universal_importer_duckdb_spark.caching import release_scoped
@@ -435,34 +467,19 @@ def main() -> int:
            " exp   ratio@x1 -> x" + str(scales[-1]))
     print(hdr)
     for name in entries:
-        prior = prior_entries.get(name, {})
-        # fold this invocation into the per-cell pass histories
-        # (r15 pass-median regime — see merge_passes); exponents and
-        # ratios recompute on the per-cell MEDIANS' union
-        sp, st = merge_passes(prior, "spark", spark_t[name])
-        op, ot = merge_passes(prior, "oracle", oracle_t.get(name, {}))
-        ss = sorted(st)
-        se = _fit_exponent(ss, [st[s] for s in ss])
-        row = {"spark": st, "spark_passes": sp, "spark_exp": round(se, 2)}
+        row = build_row(prior_entries.get(name, {}), spark_t[name],
+                        oracle_t.get(name, {}))
+        st, ot = row["spark"], row.get("oracle", {})
         line = (f"{name:34s} " +
                 " ".join(f"{st.get(s, float('nan')):9.3f}"
                          for s in scales) +
-                f" {se:4.2f}  ")
+                f" {_num(row['spark_exp']):4.2f}  ")
         if ot:
-            so = sorted(ot)
-            oe = _fit_exponent(so, [ot[s] for s in so])
-            row.update({"oracle": ot, "oracle_passes": op,
-                        "oracle_exp": round(oe, 2)})
             line += (" ".join(f"{ot.get(s, float('nan')):9.3f}"
                               for s in scales) +
-                     f" {oe:4.2f}")
-            both = sorted(set(st) & set(ot))
-            if both:  # st can be empty under --side oracle (r15 advice)
-                r1 = st[both[0]] / ot[both[0]]
-                rN = st[both[-1]] / ot[both[-1]]
-                row.update({"ratio_first": round(r1, 2),
-                            "ratio_last": round(rN, 2)})
-                line += f"   {r1:5.2f} -> {rN:5.2f}"
+                     f" {_num(row['oracle_exp']):4.2f}")
+            if "ratio_last" in row:
+                line += f"   {row['ratio_first']:5.2f} -> {row['ratio_last']:5.2f}"
         print(line)
         result["entries"][name] = row
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # 28-bit md5 prefix of a key: uniform on [0, 2^28), portable to DuckDB
-# as ('0x'||substr(md5(s),1,7))::BIGINT — see shingle_hash("md5_28").
+# as ('0x'||substr(md5(s),1,7))::BIGINT — see dedup_text.shingle_hash.
 _HASH_SPACE = 1 << 28
 
 

@@ -1,16 +1,24 @@
 """Near-duplicate text detection at scale — the generalization of the
 reference's exact composite-key dedup (SURVEY.md §2.3) to fuzzy
-content identity, built entirely from JVM-side column expressions
-(no Python UDFs in any hot path).
+content identity. Grouping, banding and verification are JVM column
+expressions; three per-row hot spots run in Arrow-batched numpy
+kernels (MinHash permutation minima, SimHash fingerprints, SimHash
+in-bucket pair expansion). Every operator has ONE implementation, and
+every hash is md5-derived so the DuckDB oracles in the registry replay
+each stage bit-for-bit.
 
 Operators:
 - exact_dedup        — content-hash groupBy (one shuffle, map-side combine)
 - minhash_signatures — k-perm MinHash over character shingles
 - minhash_lsh_pairs  — banded LSH candidate generation + exact-Jaccard
                        verification (the classic MMDS ch.3 pipeline)
-- simhash_64         — 64-bit SimHash fingerprints
-- simhash_near_pairs — banded SimHash bucketing + Hamming verification
-- embedding_near_pairs — cosine near-dup via random-hyperplane buckets
+- simhash_32x2_portable — 64-bit SimHash as two 32-bit halves
+- simhash_fp_columns — the same fingerprint as pure column expressions
+                       (the Structured Streaming form)
+- simhash_near_pairs_portable — chunk-banded SimHash bucketing +
+                       Hamming verification
+- neardup_clusters / cluster_canonical — pairs -> connected components
+                       -> one kept member per cluster
 
 Scale design: every pairing step goes through a bucket-join (shuffle on
 the band/bucket hash) so candidate generation is O(collisions), never
@@ -22,6 +30,7 @@ buckets the way production LSH pipelines drop stop-shingles.
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import numpy as np
@@ -136,32 +145,17 @@ def spread_for_compute(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def bucket_pairs(
-    df: DataFrame,
-    bucket_cols,
-    id_col: str,
-    max_bucket_size: int,
-    payload_col: str | None = None,
-    unique_buckets: bool = False,
+    df: DataFrame, bucket_cols, id_col: str, max_bucket_size: int
 ) -> DataFrame:
     """Distinct candidate pairs ``(id_a < id_b)`` of rows sharing a
     bucket: ONE groupBy shuffle + in-bucket combination expansion,
     instead of window-count + self-join + distinct (three shuffles of
     the full bucketed table). Degenerate buckets above
     ``max_bucket_size`` are dropped the way production LSH pipelines
-    drop stop-shingles. With ``payload_col`` each side's payload rides
-    along as ``payload_a`` / ``payload_b`` so the verify step needs no
-    join back.
-
-    ``unique_buckets=True`` declares each id appears in at most ONE
-    bucket (e.g. a single LSH signature per row, not banded minhash),
-    so no pair can be generated twice and the de-duplicating
-    ``distinct()`` — a full shuffle of the pair payloads — is skipped."""
-    fields = [F.col(id_col).alias("id")]
-    if payload_col:
-        fields.append(F.col(payload_col).alias("payload"))
+    drop stop-shingles."""
     buckets = (
         df.groupBy(*bucket_cols)
-        .agg(F.collect_list(F.struct(*fields)).alias("items"))
+        .agg(F.collect_list(F.struct(F.col(id_col).alias("id"))).alias("items"))
         .filter((F.size("items") >= 2) & (F.size("items") <= max_bucket_size))
     )
     pair_expr = F.flatten(
@@ -176,14 +170,11 @@ def bucket_pairs(
             ),
         )
     )
-    cols = [F.col("p.a.id").alias("id_a"), F.col("p.b.id").alias("id_b")]
-    if payload_col:
-        cols += [
-            F.col("p.a.payload").alias("payload_a"),
-            F.col("p.b.payload").alias("payload_b"),
-        ]
-    out = buckets.select(F.explode(pair_expr).alias("p")).select(*cols)
-    return out if unique_buckets else out.distinct()
+    return (
+        buckets.select(F.explode(pair_expr).alias("p"))
+        .select(F.col("p.a.id").alias("id_a"), F.col("p.b.id").alias("id_b"))
+        .distinct()
+    )
 
 
 def exact_dedup(
@@ -260,25 +251,19 @@ def shingles(col, n: int = 5, distinct: bool = False):
 
 _MERSENNE_31 = (1 << 31) - 1
 
+# σ margin of the signature presift in minhash_lsh_pairs; the registry's
+# DuckDB replica (_minhash_lsh_sql) reads this same constant
+PRESIFT_SIGMA = 3.0
 
-def shingle_hash(hasher: str = "xxhash64"):
-    """Shingle-string -> int hash expression factory.
 
-    - "xxhash64": Spark-native, fastest (the scale default); pmod into
-      the Mersenne domain for the permutation arithmetic.
-    - "md5_28": first 7 hex chars of md5 as a 28-bit int — bit-exactly
-      reproducible in DuckDB as ``('0x'||substr(md5(s),1,7))::BIGINT``,
-      which is what makes a full cross-engine SQL oracle for the LSH
-      pipeline possible (DuckDB has no xxhash64). 28 bits keep
-      a*h+b < 2^59: overflow-free int64 in both engines.
-    """
-    if hasher == "xxhash64":
-        return lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_31))
-    if hasher == "md5_28":
-        return lambda s: F.conv(
-            F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10
-        ).cast("bigint")
-    raise ValueError(f"unknown hasher: {hasher}")
+def shingle_hash(s):
+    """Shingle-string -> 28-bit int: the first 7 hex chars of its md5.
+    Bit-exactly reproducible in DuckDB as
+    ``('0x'||substr(md5(s),1,7))::BIGINT``, which is what makes a full
+    cross-engine SQL oracle for the LSH pipeline possible (DuckDB has
+    no xxhash64). 28 bits keep a*h+b < 2^59: overflow-free int64 in
+    both engines, and inside the Mersenne domain of the permutations."""
+    return F.conv(F.substring(F.md5(s.cast("binary")), 1, 7), 16, 10).cast("bigint")
 
 
 def _perm_params(num_perm: int, seed: int = 7):
@@ -292,10 +277,10 @@ def _perm_params(num_perm: int, seed: int = 7):
 
 
 def _perm_min_pandas_udf(num_perm: int, seed: int = 7, sample_mod: int = 1):
-    """Arrow-batched permutation-min: given the JVM-hashed shingle
-    array, compute all num_perm (a*h+b) mod p minima. a, h < 2^31 so
-    a*h+b < 2^62+2^31 — exact in int64, identical to the JVM
-    expression path bit-for-bit.
+    """Arrow-batched permutation-min: given the hashed shingle array,
+    compute all num_perm (a*h+b) mod p minima. a < 2^31 and h < 2^28,
+    so a*h+b stays exact in int64 — identical bit-for-bit to the
+    DuckDB replica's ``(a*h+b)%2147483647``.
 
     Vectorized ACROSS the batch, not per row: all rows' hashes are
     concatenated into one flat vector, each permutation is one
@@ -303,11 +288,11 @@ def _perm_min_pandas_udf(num_perm: int, seed: int = 7, sample_mod: int = 1):
     ``np.minimum.reduceat`` at the row offsets — num_perm vectorized
     passes per batch instead of one numpy broadcast per row.
 
-    ``sample_mod > 1`` applies the consistent mod-sampling here (keep
-    hashes ≡ 0 mod k, fall back to the full set when a short doc
-    samples to empty) — same semantics as the interpreted
-    ``F.filter`` projection the expr path uses, without two extra
-    interpreted passes over the array column."""
+    ``sample_mod > 1`` applies the consistent mod-sampling here: keep
+    hashes ≡ 0 mod k. The filter is a function of the shingle alone,
+    so it selects the SAME shingles in every document and the sampled
+    sets' Jaccard is an unbiased estimate of the full Jaccard. A short
+    doc that samples to empty falls back to its full set."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     params = _perm_params(num_perm, seed)
@@ -351,71 +336,26 @@ def minhash_signatures(
     num_perm: int = 32,
     shingle_n: int = 5,
     sample_mod: int = 1,
-    impl: str = "pandas",
-    hasher: str = "xxhash64",
 ) -> DataFrame:
     """MinHash signature per document via universal hashing: each
-    shingle is string-hashed ONCE (xxhash64 -> pmod into [0, 2^31-1)),
-    then the i-th permutation is (a_i*h + b_i) mod (2^31-1) — three
-    integer ops instead of a fresh string hash per permutation
-    (the standard datasketch-style scheme; 32x less string hashing).
-    The Mersenne-prime domain keeps a_i*h under 62 bits, so the
-    arithmetic can never overflow ANSI-mode bigints.
+    shingle is string-hashed ONCE (:func:`shingle_hash`), then the
+    i-th permutation is (a_i*h + b_i) mod (2^31-1) — three integer ops
+    instead of a fresh string hash per permutation (the standard
+    datasketch-style scheme; 32x less string hashing). The num_perm
+    minima come from one Arrow-batched numpy pass over the hashes
+    (:func:`_perm_min_pandas_udf`).
 
     Signatures are num_perm*8 bytes however long the document is —
     this is what makes 100 TB near-dedup tractable (shuffle
-    signatures, not text).
-
-    ``impl``: "pandas" (default) computes the num_perm minima in an
-    Arrow-batched numpy broadcast — one pass over the hashes instead
-    of num_perm interpreted higher-order passes (Catalyst does not
-    codegen lambda bodies; measured ~4x on the signature stage).
-    "expr" keeps the pure-JVM column-expression path. Both produce
-    bit-identical signatures (covered by a parity test)."""
-    def perm_min(a: int, b: int):
-        # factory closure: a `lambda h, a=a, b=b` two-param lambda
-        # would make PySpark pass the array index as the second arg
-        return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE_31))
-
-    # materialize hashed shingles as a real column FIRST: inlining the
-    # (quadratic array_distinct) shingle build into each of the
-    # num_perm array_min terms would re-evaluate it num_perm times per
-    # row (measured 30x slowdown)
-    hashed = F.transform(shingles(text_col, shingle_n), shingle_hash(hasher))
+    signatures, not text)."""
+    # sample_mod is applied inside the kernel: no interpreted filter
+    # pass over the array column
+    hashed = F.transform(shingles(text_col, shingle_n), shingle_hash)
     with_h = spread_for_compute(df, id_col).select(
         F.col(id_col), hashed.alias("__h")
     )
-    if impl == "pandas":
-        # sampling folded into the Arrow kernel — no interpreted
-        # filter/fallback projections over the array column
-        sig_udf = _perm_min_pandas_udf(num_perm, sample_mod=sample_mod)
-        return with_h.select(F.col(id_col), sig_udf("__h").alias("signature"))
-    if sample_mod > 1:
-        # consistent mod-sampling: keep shingles whose base hash is
-        # 0 (mod k). The filter is a function of the shingle alone, so
-        # it selects the SAME shingles in every document — the sampled
-        # sets' Jaccard is an unbiased estimate of the full Jaccard,
-        # and each permutation now scans |shingles|/k elements
-        # (higher-order functions run interpreted, so per-element
-        # node-evaluation count is the actual cost driver).
-        # Short docs that sample to empty fall back to the full set.
-        # NB each step is its own projection: inlining one step's
-        # expression into the next re-evaluates it per reference.
-        with_h = with_h.select(
-            id_col,
-            "__h",
-            F.filter("__h", lambda h: h % sample_mod == 0).alias("__hs"),
-        ).select(
-            id_col,
-            F.when(F.size("__hs") > 0, F.col("__hs")).otherwise(F.col("__h")).alias("__h"),
-        )
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("__h"), perm_min(a, b)))
-            for (a, b) in _perm_params(num_perm)
-        ]
-    )
-    return with_h.select(F.col(id_col), sig.alias("signature"))
+    sig_udf = _perm_min_pandas_udf(num_perm, sample_mod=sample_mod)
+    return with_h.select(F.col(id_col), sig_udf("__h").alias("signature"))
 
 
 def minhash_lsh_pairs(
@@ -427,75 +367,56 @@ def minhash_lsh_pairs(
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
     max_bucket_size: int = 50,
-    cache_intermediate: bool = True,
     sample_mod: int = 1,
-    impl: str = "pandas",
-    presift_sigma: float = 3.0,
-    hasher: str = "xxhash64",
-    portable_buckets: bool = False,
 ) -> DataFrame:
     """Candidate pairs from banded MinHash, verified with exact
     shingle-set Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b.
-
-    ``hasher="md5_28"`` + ``portable_buckets=True`` makes every stage
-    bit-reproducible in DuckDB SQL (band buckets keyed on the raw
-    signature component tuple instead of their xxhash64), enabling a
-    full cross-engine oracle; the default keeps the cheaper
-    Spark-native hashing for the scale path. Semantics are identical.
+    Every stage is bit-reproducible in DuckDB SQL (the registry's
+    ``_minhash_lsh_sql``): md5_28 shingle hashes, and band buckets
+    keyed on the raw signature component tuple.
 
     bands must divide num_perm; rows-per-band r = num_perm//bands sets
     the S-curve threshold ≈ (1/bands)^(1/r).
 
-    ``cache_intermediate`` persists the signature/shingle frames that
-    feed both sides of the self-joins (signatures are num_perm*8 bytes
-    per doc — tiny; shingle sets are corpus-sized, trade memory for
-    the recompute on the verify join).
+    The signature, candidate and shingle-set frames each feed both
+    sides of a self-join, so they are scoped-cached (signatures are
+    num_perm*8 bytes per doc — tiny; shingle sets are corpus-sized,
+    trading memory for the recompute on the verify join).
 
-    ``presift_sigma``: before the exact-Jaccard verify, estimate each
-    candidate pair's Jaccard from its (already-computed, tiny)
-    signatures — the fraction of equal components — and drop pairs
-    whose estimate is more than this many standard deviations
+    Presift: before the exact-Jaccard verify, estimate each candidate
+    pair's Jaccard from its (already-computed, tiny) signatures — the
+    fraction of equal components — and drop pairs whose estimate is
+    more than ``PRESIFT_SIGMA`` standard deviations
     (σ = sqrt(j(1-j)/num_perm)) below the threshold. Single-band
     chance collisions sit near r/num_perm and are eliminated without
     ever touching their shingle sets; a true-positive pair at exactly
-    the threshold survives with P ≈ Φ(sigma) (99.87% at 3σ). The
-    exact verify — the only stage that shuffles corpus-sized shingle
-    arrays — then runs on the survivors alone, and only THEIR
-    documents are shingled at all (left-semi pushdown). 0 disables.
+    the threshold survives with P ≈ Φ(3) (99.87%). The exact verify —
+    the only stage that shuffles corpus-sized shingle arrays — then
+    runs on the survivors alone, and only THEIR documents are shingled
+    at all (left-semi pushdown).
     """
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
     r = num_perm // bands
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_perm, shingle_n, sample_mod, impl, hasher
+    # scoped_cache = cache() semantics (CacheManager plan-equality
+    # reuse across actions AND rebuilt identical queries) plus a
+    # per-session ledger so sweepers release storage explicitly
+    # (caching.release_scoped) instead of accumulating to LRU
+    sigs = scoped_cache(
+        minhash_signatures(df, text_col, id_col, num_perm, shingle_n, sample_mod)
     )
-    if cache_intermediate:
-        # scoped_cache = cache() semantics (CacheManager plan-equality
-        # reuse across actions AND rebuilt identical queries) plus a
-        # per-session ledger so sweepers release storage explicitly
-        # (caching.release_scoped) instead of accumulating to LRU
-        sigs = scoped_cache(sigs)
 
-    if portable_buckets:
-        # raw component tuple as the bucket key (groupable in any
-        # engine); at scale the xxhash64 form below shrinks the
-        # shuffled key to 8 bytes, which is why it stays the default
-        bucket_fields = lambda b: [  # noqa: E731
-            F.col("signature")[b * r + j].alias(f"c{j}") for j in range(r)
-        ]
-        bucket_cols = ["band"] + [f"c{j}" for j in range(r)]
-    else:
-        bucket_fields = lambda b: [  # noqa: E731
-            F.xxhash64(*[F.col("signature")[b * r + j] for j in range(r)]).alias("bucket")
-        ]
-        bucket_cols = ["band", "bucket"]
-
+    # raw component tuple as the bucket key (groupable in any engine)
+    bucket_cols = ["band"] + [f"c{j}" for j in range(r)]
     banded = sigs.select(
         id_col,
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(b).alias("band"), *bucket_fields(b))
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        *[F.col("signature")[b * r + j].alias(f"c{j}") for j in range(r)],
+                    )
                     for b in range(bands)
                 ]
             )
@@ -507,22 +428,20 @@ def minhash_lsh_pairs(
     # once (bucket_pairs) is the difference that matters.
     cand = bucket_pairs(banded, bucket_cols, id_col, max_bucket_size)
 
-    if presift_sigma > 0:
-        cutoff = jaccard_threshold - presift_sigma * math.sqrt(
-            jaccard_threshold * (1.0 - jaccard_threshold) / num_perm
+    cutoff = jaccard_threshold - PRESIFT_SIGMA * math.sqrt(
+        jaccard_threshold * (1.0 - jaccard_threshold) / num_perm
+    )
+    if cutoff > 0:
+        est = F.size(
+            F.filter(F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda m: m)
+        ) / F.lit(float(num_perm))
+        cand = (
+            cand.join(sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa")), "id_a")
+            .join(sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("__sb")), "id_b")
+            .filter(est >= cutoff)
+            .select("id_a", "id_b")
         )
-        if cutoff > 0:
-            est = F.size(
-                F.filter(F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda m: m)
-            ) / F.lit(float(num_perm))
-            cand = (
-                cand.join(sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa")), "id_a")
-                .join(sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("__sb")), "id_b")
-                .filter(est >= cutoff)
-                .select("id_a", "id_b")
-            )
-    if cache_intermediate:
-        cand = scoped_cache(cand)
+    cand = scoped_cache(cand)
 
     # shingle ONLY documents that appear in a surviving pair — at scale
     # the corpus is orders of magnitude larger than the candidate set,
@@ -532,32 +451,24 @@ def minhash_lsh_pairs(
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # Verify on HASHED shingles: exact set-Jaccard is preserved
-    # (xxhash64 collisions among a few hundred shingles are ~2^-50),
-    # while array_intersect/array_union compare bigints instead of
-    # n-char strings — measurably cheaper in the interpreted
-    # higher-order evaluator, and the shuffled verify payload is 8
-    # bytes per shingle regardless of shingle_n.
+    # Verify on HASHED shingles: array_intersect compares bigints
+    # instead of n-char strings — measurably cheaper in the
+    # interpreted higher-order evaluator, and the shuffled verify
+    # payload is 8 bytes per shingle regardless of shingle_n. The
+    # md5_28 sets are the cross-engine ground truth (a 28-bit
+    # collision affects both engines identically, so the oracle
+    # comparison stays bit-exact).
     # The per-doc array is pre-deduplicated and each side's set size
     # rides along, so the per-pair work is ONE array_intersect —
     # |A∪B| = |A|+|B|-|A∩B| replaces the (larger) array_union pass.
-    # xxhash64 for verify even when the signature hasher is md5_28:
-    # full-width hashing makes collisions ~2^-50 instead of ~2^-29.
-    # EXCEPT in portable mode, where the oracle must replay the exact
-    # same hashed sets — there the md5_28 sets themselves are the
-    # cross-engine ground truth (any collision affects both engines
-    # identically, so the comparison stays bit-exact).
-    verify_hash = (
-        shingle_hash(hasher) if hasher != "xxhash64" else (lambda s: F.xxhash64(s))
+    sh = scoped_cache(
+        spread_for_compute(df.join(need_ids, [id_col], "left_semi"), id_col).select(
+            F.col(id_col),
+            F.array_distinct(
+                F.transform(shingles(text_col, shingle_n), shingle_hash)
+            ).alias("sh"),
+        ).withColumn("n_sh", F.size("sh"))
     )
-    sh = spread_for_compute(df.join(need_ids, [id_col], "left_semi"), id_col).select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(shingles(text_col, shingle_n), verify_hash)
-        ).alias("sh"),
-    ).withColumn("n_sh", F.size("sh"))
-    if cache_intermediate:
-        sh = scoped_cache(sh)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     verified = (
         cand.join(
@@ -580,58 +491,22 @@ def minhash_lsh_pairs(
     return verified
 
 
-def simhash_64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash over whitespace tokens: per-token xxhash64 votes
-    +1/-1 per bit; fingerprint bit b set iff the vote sum is positive.
-    Per-bit set-vote counts via array filters (shift amounts must be
-    Python ints in Spark, so the 64-bit loop runs at plan-build time;
-    the data-path is still pure JVM expressions)."""
-    df = spread_for_compute(df, id_col)
-    toks = F.split(F.col(text_col), " ")
-    n_tok = F.size(toks)
-    terms = []
-    for b in range(64):
-        # signed-64 bit mask (b=63 wraps to the sign bit)
-        mask = (1 << b) if b < 63 else (1 << 63) - (1 << 64)
-
-        def bit_set(t, mask=mask):
-            return F.xxhash64(t).bitwiseAND(F.lit(mask)) != 0
-
-        set_votes = F.size(F.filter(toks, bit_set))
-        terms.append(
-            F.when(set_votes * 2 > n_tok, F.lit(mask).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    fp = terms[0]
-    for t in terms[1:]:
-        fp = fp + t
-    return df.select(F.col(id_col), fp.alias("simhash"))
-
-
 def _simhash_pandas_udf():
     """Arrow-batched portable-SimHash kernel: md5 per token via
     hashlib (identical bytes to the SQL ``md5``), bit votes vectorized
-    in numpy. Bit-identical to the expression path — covered by a
-    differential test.
+    in numpy. Bit-identical to :func:`simhash_fp_columns` — covered by
+    a differential test.
 
-    r16 rewrite (guide §4.2): the r15 body paid one ``hashlib.md5`` +
-    hexdigest + two 8-hex-char int parses PER TOKEN OCCURRENCE plus a
-    fresh (n_tok, 32) broadcast per row. Token distributions are
-    heavy-tailed (the certification corpus has ~31 distinct tokens
-    over 270k occurrences; any natural corpus is Zipfian), so the md5
-    now runs once per DISTINCT token per Arrow batch: a per-batch
-    dict maps token -> row of a precomputed (uniq, 64) 0/1 bit matrix
-    (``np.unpackbits`` over the first 8 digest bytes, MSB-first), and
-    each row's votes are one fancy-index + column sum. Same md5 bytes,
-    same majority rule, same (fp_lo, fp_hi) split — int(hexdigest[:8],
-    16) is exactly the big-endian int of digest bytes 0-4, and
-    [8:16] of bytes 4-8. Measured ~4.5x single-core on a 90:1
-    dedup-ratio batch; degrades gracefully to ~the old cost when
-    every token is unique (one md5 per token either way, minus the
-    hex parsing). Per-batch memory is O(distinct tokens * 64 bytes)."""
+    md5 runs once per DISTINCT token per Arrow batch (token
+    distributions are heavy-tailed: the certification corpus has ~31
+    distinct tokens over 270k occurrences; any natural corpus is
+    Zipfian): a per-batch dict maps token -> row of a precomputed
+    (uniq, 64) 0/1 bit matrix (``np.unpackbits`` over the first 8
+    digest bytes, MSB-first), and each row's votes are one
+    fancy-index + column sum. int(hexdigest[:8], 16) is exactly the
+    big-endian int of digest bytes 0-4, and [8:16] of bytes 4-8, so
+    the (fp_lo, fp_hi) split matches the SQL replica. Per-batch memory
+    is O(distinct tokens * 64 bytes)."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     import hashlib
@@ -675,8 +550,7 @@ def _simhash_pandas_udf():
 
 
 def simhash_32x2_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    impl: str = "pandas",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Portable SimHash: the 64-bit fingerprint as TWO 32-bit halves
     (fp_lo, fp_hi), with per-token bit sources taken from md5 hex
@@ -684,21 +558,12 @@ def simhash_32x2_portable(
     DuckDB, which a xxhash64-based fingerprint is not. Splitting into
     halves keeps every intermediate in non-negative int32 range, so no
     cross-engine signed-overflow semantics are ever in play.
-
-    ``impl="pandas"`` (default) computes fingerprints in an
-    Arrow-batched numpy kernel; ``"expr"`` keeps the pure-JVM
-    column-expression path (per-token hash arrays materialized once,
-    64 bit-vote filters over bigint arrays). Both produce bit-identical
-    fingerprints."""
-    if impl == "pandas":
-        fp_udf = _simhash_pandas_udf()
-        return spread_for_compute(df, id_col).select(
-            F.col(id_col), fp_udf(F.col(text_col)).alias("__fp")
-        ).select(id_col, "__fp.fp_lo", "__fp.fp_hi")
-
-    return simhash_fp_columns(spread_for_compute(df, id_col), text_col).select(
-        id_col, "fp_lo", "fp_hi"
-    )
+    Fingerprints come from the Arrow-batched numpy kernel
+    (:func:`_simhash_pandas_udf`)."""
+    fp_udf = _simhash_pandas_udf()
+    return spread_for_compute(df, id_col).select(
+        F.col(id_col), fp_udf(F.col(text_col)).alias("__fp")
+    ).select(id_col, "__fp.fp_lo", "__fp.fp_hi")
 
 
 def simhash_fp_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -707,7 +572,7 @@ def simhash_fp_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
     no UDF, no repartition — so this lifts UNCHANGED onto Structured
     Streaming frames (the streaming near-dup dedup builds on it).
     Bit-identical to the pandas kernel and the DuckDB SQL replica."""
-    # coalesce NULL text to '' so the expr path fingerprints [''] like
+    # coalesce NULL text to '' so this path fingerprints [''] like
     # the pandas kernel (None -> ""); keeps the bit-identical guarantee
     # on corpora that carry null text
     toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
@@ -758,44 +623,57 @@ _POPCNT16 = np.unpackbits(
 ).sum(axis=1).astype(np.uint8)
 
 
+# Pairs per XOR/popcount pass of the pair kernel. A size class of
+# same-size buckets is split into sub-passes of at most
+# max(1, _PAIR_BUDGET // (m(m-1)/2)) buckets, so a pass's numpy
+# temporaries (int64 xor halves and gathered ids, a few tens of bytes
+# per pair) stay in the tens of MB however many large buckets one
+# Arrow batch carries. Read once when the kernel is built.
+_PAIR_BUDGET = 1 << 18
+
+
 def _simhash_pairs_kernel(
     chunks: DataFrame,
     id_col: str,
     max_hamming: int,
     max_bucket_size: int,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) from bucketed portable fingerprints via
-    an Arrow kernel — the admission-kernel playbook (r16, guide §4.2)
-    applied to ``bucket_pairs``' in-bucket expansion, which evaluates
-    INTERPRETED (nested transform + per-element array slice, O(m²)
-    slice copies per bucket; measured +1.08 s of the 2.44 s x16 pair
-    stage). The bucket grouping itself stays a JVM ``collect_list``
-    aggregation (map-side partial, one exchange — same plan shape);
-    only the expansion + hamming verify moves into numpy:
+    """(id_a, id_b, hamming) from bucketed portable fingerprints. The
+    bucket grouping is a JVM ``collect_list`` aggregation (map-side
+    partial, one exchange); the in-bucket pair expansion + hamming
+    verify runs in numpy inside ``mapInPandas`` (the interpreted
+    nested-transform expansion of :func:`bucket_pairs` cost +1.08 s of
+    the 2.44 s x16 pair stage):
 
-      * buckets are grouped BY SIZE inside each Arrow batch, so every
-        size class is one stacked (k, m) triu-indexed XOR + popcount
-        pass — no per-bucket numpy dispatch on the (dominant) tiny
-        buckets;
+      * buckets are grouped BY SIZE inside each Arrow batch, so each
+        pass is one stacked (k, m) triu-indexed XOR + popcount — no
+        per-bucket numpy dispatch on the (dominant) tiny buckets — and
+        k is capped by ``_PAIR_BUDGET``;
       * popcount via a 16-bit lookup table (values are 32-bit halves);
       * pairs failing ``hamming <= max_hamming`` never leave the
         kernel, so the de-duplicating ``distinct()`` shuffles only
-        true near-pairs. Filtering before the distinct is equivalent:
-        hamming is a function of the pair, and Catalyst pushed the
-        same predicate below the distinct in the expr form too.
+        true near-pairs (hamming is a function of the pair, so
+        filtering before the distinct is equivalent).
 
-    Three parallel ``collect_list``s (ids / fp_lo / fp_hi) index-align
-    because one aggregation operator feeds every buffer row-by-row.
-    Emits rows directly from ``mapInPandas`` (cardinality changes; no
-    explode, no struct rebuild). Output is bit-identical to the
-    expr form modulo row order — pinned by a differential test."""
+    Ids keep their input type: integral ids stay numpy ints, anything
+    else (strings) rides as an object array compared with Python's
+    ``<``, which orders strings by code point like Spark does. Null ids
+    are dropped up front — they cannot be ordered into a pair, and
+    ``collect_list`` skipping them would misalign the three parallel
+    lists (ids / fp_lo / fp_hi), which otherwise index-align because
+    one aggregation operator feeds every buffer row by row."""
+    from pyspark.sql import types as T
+
     maxh = int(max_hamming)
+    budget = _PAIR_BUDGET
+    id_type = chunks.schema[id_col].dataType
     buckets = (
-        chunks.groupBy("chunk", "bkey")
+        chunks.filter(F.col(id_col).isNotNull())
+        .groupBy("chunk", "bkey")
         .agg(
-            F.collect_list(F.col(id_col)).alias("ids"),
-            F.collect_list(F.col("fps.fp_lo")).alias("los"),
-            F.collect_list(F.col("fps.fp_hi")).alias("his"),
+            F.collect_list(id_col).alias("ids"),
+            F.collect_list("fp_lo").alias("los"),
+            F.collect_list("fp_hi").alias("his"),
         )
         .filter(
             (F.size("ids") >= 2) & (F.size("ids") <= max_bucket_size)
@@ -806,60 +684,49 @@ def _simhash_pairs_kernel(
     def expand(batches):
         lut = _POPCNT16
         for pdf in batches:
-            nb = len(pdf)
-            if nb == 0:
-                continue
-            rows = [
+            rows = sorted(
                 (
-                    np.asarray(pdf["ids"].iloc[r], dtype=np.int64),
-                    np.asarray(pdf["los"].iloc[r], dtype=np.int64),
-                    np.asarray(pdf["his"].iloc[r], dtype=np.int64),
-                )
-                for r in range(nb)
-            ]
-            szs = np.fromiter(
-                (len(r[0]) for r in rows), dtype=np.int64, count=nb
+                    (np.asarray(i), np.asarray(lo, dtype=np.int64),
+                     np.asarray(hi, dtype=np.int64))
+                    for i, lo, hi in zip(pdf["ids"], pdf["los"], pdf["his"])
+                ),
+                key=lambda r: len(r[0]),
             )
-            order = np.argsort(szs, kind="stable")
-            out_a, out_b, out_h = [], [], []
-            pos = 0
-            while pos < nb:
-                m = szs[order[pos]]
-                end = pos
-                while end < nb and szs[order[end]] == m:
-                    end += 1
-                grp = order[pos:end]
-                ids = np.stack([rows[g][0] for g in grp])
-                lo = np.stack([rows[g][1] for g in grp])
-                hi = np.stack([rows[g][2] for g in grp])
+            for m, cls in itertools.groupby(rows, key=lambda r: len(r[0])):
+                cls = list(cls)
                 ia, ib = np.triu_indices(m, 1)
-                x = lo[:, ia] ^ lo[:, ib]
-                y = hi[:, ia] ^ hi[:, ib]
-                h = (
-                    lut[x & 0xFFFF].astype(np.int32)
-                    + lut[(x >> 16) & 0xFFFF]
-                    + lut[y & 0xFFFF]
-                    + lut[(y >> 16) & 0xFFFF]
-                )
-                keep = h <= maxh
-                a = ids[:, ia][keep]
-                b = ids[:, ib][keep]
-                sw = a > b
-                out_a.append(np.where(sw, b, a))
-                out_b.append(np.where(sw, a, b))
-                out_h.append(h[keep])
-                pos = end
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate(out_a),
-                    "id_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_h).astype(np.int32),
-                }
-            )
+                step = max(1, budget // len(ia))
+                for s in range(0, len(cls), step):
+                    part = cls[s:s + step]
+                    ids = np.stack([r[0] for r in part])
+                    lo = np.stack([r[1] for r in part])
+                    hi = np.stack([r[2] for r in part])
+                    x = lo[:, ia] ^ lo[:, ib]
+                    y = hi[:, ia] ^ hi[:, ib]
+                    h = (
+                        lut[x & 0xFFFF].astype(np.int32)
+                        + lut[(x >> 16) & 0xFFFF]
+                        + lut[y & 0xFFFF]
+                        + lut[(y >> 16) & 0xFFFF]
+                    )
+                    keep = h <= maxh
+                    if not keep.any():
+                        continue
+                    a = ids[:, ia][keep]
+                    b = ids[:, ib][keep]
+                    sw = a > b
+                    yield pd.DataFrame({
+                        "id_a": np.where(sw, b, a),
+                        "id_b": np.where(sw, a, b),
+                        "hamming": h[keep],
+                    })
 
-    return buckets.mapInPandas(
-        expand, schema="id_a bigint, id_b bigint, hamming int"
-    ).distinct()
+    schema = T.StructType([
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
+        T.StructField("hamming", T.IntegerType()),
+    ])
+    return buckets.mapInPandas(expand, schema=schema).distinct()
 
 
 def simhash_near_pairs_portable(
@@ -868,99 +735,33 @@ def simhash_near_pairs_portable(
     id_col: str = "doc_id",
     max_hamming: int = 8,
     max_bucket_size: int = 200,
-    impl: str = "pandas",
-    pair_impl: str = "kernel",
 ) -> DataFrame:
-    """simhash_near_pairs on the portable two-half fingerprint: band
-    into four 16-bit chunks (two per half), bucket-join, verify with
-    bit_count(xor) summed over the halves. Bit-reproducible in DuckDB
-    — see the generated oracle in entry_queries._simhash_sql.
-
-    ``pair_impl``: "kernel" (default) runs the in-bucket pair
-    expansion + hamming verify in an Arrow numpy kernel
-    (:func:`_simhash_pairs_kernel`); "expr" keeps the interpreted
-    ``bucket_pairs`` HOF expansion + JVM bit_count verify. Identical
-    output — pinned by a differential test. The kernel requires
-    integral ids (numpy int64); non-integral id columns take the expr
-    path automatically."""
-    fp = simhash_32x2_portable(df, text_col, id_col, impl)
+    """Near-dup pairs on the portable two-half SimHash: band the
+    fingerprint into four 16-bit chunks (two per half; pigeonhole: a
+    pair within Hamming distance 3 shares a chunk, for larger
+    thresholds the chunk match is a recall heuristic), bucket on
+    (chunk, key), verify with the popcount of the xor summed over the
+    halves (:func:`_simhash_pairs_kernel`). Bit-reproducible in DuckDB
+    — see the generated oracle in ``registry.core._simhash_sql``."""
+    fp = simhash_32x2_portable(df, text_col, id_col)
     chunk_key = [
-        (F.shiftrightunsigned(F.col("fp_lo"), 0) if c == 0 else
-         F.shiftrightunsigned(F.col("fp_lo"), 16) if c == 1 else
-         F.shiftrightunsigned(F.col("fp_hi"), 0) if c == 2 else
-         F.shiftrightunsigned(F.col("fp_hi"), 16)).bitwiseAND(F.lit(0xFFFF))
-        for c in range(4)
+        F.shiftrightunsigned(F.col(half), shift).bitwiseAND(F.lit(0xFFFF))
+        for half, shift in (("fp_lo", 0), ("fp_lo", 16), ("fp_hi", 0), ("fp_hi", 16))
     ]
     chunks = fp.select(
         id_col,
-        F.struct("fp_lo", "fp_hi").alias("fps"),
+        "fp_lo",
+        "fp_hi",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(c).alias("chunk"), chunk_key[c].alias("bkey"))
-                    for c in range(4)
+                    F.struct(F.lit(c).alias("chunk"), key.alias("bkey"))
+                    for c, key in enumerate(chunk_key)
                 ]
             )
         ).alias("cc"),
-    ).select(id_col, "fps", "cc.chunk", "cc.bkey")
-    if pair_impl == "kernel":
-        from pyspark.sql import types as T
-
-        if isinstance(
-            chunks.schema[id_col].dataType, (T.LongType, T.IntegerType)
-        ):
-            return _simhash_pairs_kernel(
-                chunks, id_col, max_hamming, max_bucket_size
-            )
-    ham = (
-        F.bit_count(F.col("payload_a.fp_lo").bitwiseXOR(F.col("payload_b.fp_lo")))
-        + F.bit_count(F.col("payload_a.fp_hi").bitwiseXOR(F.col("payload_b.fp_hi")))
-    )
-    return (
-        bucket_pairs(chunks, ["chunk", "bkey"], id_col, max_bucket_size, "fps")
-        .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 12,
-    max_bucket_size: int = 200,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64-bit fingerprint into four
-    16-bit chunks (pigeonhole: any pair within Hamming distance 3*16
-    shares a chunk; for tighter thresholds the chunk match is a recall
-    heuristic), bucket-join, verify with bit_count(xor)."""
-    fp = simhash_64(df, text_col, id_col)
-    chunks = fp.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select(id_col, "simhash", "cc.chunk", "cc.key")
-    return (
-        bucket_pairs(chunks, ["chunk", "key"], id_col, max_bucket_size, "simhash")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("payload_a").bitwiseXOR(F.col("payload_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    ).select(id_col, "fp_lo", "fp_hi", "cc.chunk", "cc.bkey")
+    return _simhash_pairs_kernel(chunks, id_col, max_hamming, max_bucket_size)
 
 
 def neardup_clusters(

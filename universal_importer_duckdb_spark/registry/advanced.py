@@ -2531,8 +2531,7 @@ def docs_cluster_canonical(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_perm=32, bands=8, shingle_n=5,
-                              jaccard_threshold=0.4, sample_mod=4,
-                              hasher="md5_28", portable_buckets=True)
+                              jaccard_threshold=0.4, sample_mod=4)
     clusters = neardup_clusters(pairs, docs.select("doc_id"))
     return cluster_canonical(clusters, docs)
 
@@ -2994,8 +2993,7 @@ def docs_fuzzy_benchmark_contamination(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_perm=32, bands=8, shingle_n=5,
-                              jaccard_threshold=0.4, sample_mod=4,
-                              hasher="md5_28", portable_buckets=True)
+                              jaccard_threshold=0.4, sample_mod=4)
     is_bench_a = F.col("id_a") % 97 == 0
     is_bench_b = F.col("id_b") % 97 == 0
     return (

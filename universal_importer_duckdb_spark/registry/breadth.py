@@ -1362,8 +1362,7 @@ def docs_corpus_assembly_pipeline(spark, sf_dir):
         .drop("__fp")
     )
     pairs = minhash_lsh_pairs(exact, num_perm=32, bands=8, shingle_n=5,
-                              jaccard_threshold=0.4, sample_mod=4,
-                              hasher="md5_28", portable_buckets=True)
+                              jaccard_threshold=0.4, sample_mod=4)
     clusters = neardup_clusters(pairs, exact.select("doc_id"))
     surv = _scoped_cache(exact.join(
         clusters.filter("is_kept").select("doc_id"), "doc_id", "left_semi"

@@ -1293,33 +1293,35 @@ SELECT event_id, user_id, event_type, value, props, epoch_us(ts) AS ts_us FROM (
 
 
 def docs_minhash_lsh_neardup(spark, sf_dir):
-    """MinHash+LSH near-dup pairs in portable mode: shingles hashed
-    with md5_28 (reproducible in DuckDB, unlike xxhash64) and band
-    buckets keyed on raw signature component tuples, so the ENTIRE
-    pipeline — shingle→hash→sample→32 permutations→8-band bucketing→
-    bucket-size cap→σ-presift→exact-Jaccard verify — is replayed
-    bit-for-bit by the SQL oracle below. The xxhash64 scale path is
-    the operator default and keeps its own differential tests."""
+    """MinHash+LSH near-dup pairs: shingles hashed with md5_28
+    (reproducible in DuckDB, unlike xxhash64) and band buckets keyed
+    on raw signature component tuples, so the ENTIRE pipeline —
+    shingle→hash→sample→32 permutations→8-band bucketing→bucket-size
+    cap→σ-presift→exact-Jaccard verify — is replayed bit-for-bit by
+    the SQL oracle below. This is the operator's only path."""
     from universal_importer_duckdb_spark.operators.dedup_text import minhash_lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
     return minhash_lsh_pairs(docs, num_perm=32, bands=8, shingle_n=5,
-                             jaccard_threshold=0.4, sample_mod=4,
-                             hasher="md5_28", portable_buckets=True)
+                             jaccard_threshold=0.4, sample_mod=4)
 
 
 def _minhash_lsh_sql(num_perm: int = 32, bands: int = 8, shingle_n: int = 5,
                      threshold: float = 0.4, sample_mod: int = 4,
-                     max_bucket_size: int = 50, presift_sigma: float = 3.0,
+                     max_bucket_size: int = 50,
                      src: str = "documents") -> str:
-    """DuckDB replica of the portable minhash_lsh_pairs: identical
-    md5_28 shingle hashing, identical seeded permutation params,
-    identical banding/cap/presift/verify arithmetic. ``src`` names the
+    """DuckDB replica of minhash_lsh_pairs: identical md5_28 shingle
+    hashing, identical seeded permutation params, identical
+    banding/cap/presift/verify arithmetic (the presift margin is the
+    operator's own PRESIFT_SIGMA). ``src`` names the
     relation/CTE supplying (doc_id, text) — lets composed pipelines
     run the same replay on a filtered subset."""
     import math as _math
 
-    from universal_importer_duckdb_spark.operators.dedup_text import _perm_params
+    from universal_importer_duckdb_spark.operators.dedup_text import (
+        PRESIFT_SIGMA,
+        _perm_params,
+    )
 
     r = num_perm // bands
     params = _perm_params(num_perm)
@@ -1336,7 +1338,7 @@ def _minhash_lsh_sql(num_perm: int = 32, bands: int = 8, shingle_n: int = 5,
         for b in range(bands)
     )
     ckey = ", ".join(["band"] + [f"c{j}" for j in range(r)])
-    cutoff = threshold - presift_sigma * _math.sqrt(
+    cutoff = threshold - PRESIFT_SIGMA * _math.sqrt(
         threshold * (1.0 - threshold) / num_perm
     )
     return f"""
@@ -1453,8 +1455,8 @@ def docs_simhash_neardup(spark, sf_dir):
     """SimHash near-dup pairs in portable mode (md5-half token hashes,
     fingerprint as two 32-bit ints) so the whole pipeline — token
     hash→64 bit votes→4×16-bit chunk banding→bucket cap→hamming
-    verify — replays bit-for-bit in the SQL oracle. The xxhash64
-    single-int64 simhash_64 stays the operator default for scale."""
+    verify — replays bit-for-bit in the SQL oracle. This portable
+    fingerprint is the operator's only form."""
     from universal_importer_duckdb_spark.operators.dedup_text import (
         simhash_near_pairs_portable,
     )
@@ -2298,8 +2300,7 @@ def portable_neardup_clusters(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, num_perm=32, bands=8, shingle_n=5,
-                              jaccard_threshold=0.4, sample_mod=4,
-                              hasher="md5_28", portable_buckets=True)
+                              jaccard_threshold=0.4, sample_mod=4)
     return neardup_clusters(pairs, docs.select("doc_id"))
 
 
@@ -2520,8 +2521,7 @@ def docs_training_pipeline(spark, sf_dir):
     )
     exact = _scoped_cache(exact)
     pairs = minhash_lsh_pairs(exact, num_perm=32, bands=8, shingle_n=5,
-                              jaccard_threshold=0.4, sample_mod=4,
-                              hasher="md5_28", portable_buckets=True)
+                              jaccard_threshold=0.4, sample_mod=4)
     clusters = neardup_clusters(pairs, exact.select("doc_id"))
     surv = _scoped_cache(exact.join(
         clusters.filter("is_kept").select("doc_id"), "doc_id", "left_semi"

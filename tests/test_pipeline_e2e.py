@@ -196,3 +196,235 @@ def test_missing_explicit_order_cols_raise(spark, tmp_path):
             spark, cfg, "employees", source_df=df,
             order_cols=["no_such_column"], today="2026-08-13",
         )
+
+
+def _csv_rows(path: str) -> list[tuple[str, ...]]:
+    import csv
+
+    with open(path, newline="") as f:
+        return [tuple(r) for r in csv.reader(f)]
+
+
+def _outputs(out_dir: str) -> dict[str, list[tuple[str, ...]]]:
+    """Every CSV the run wrote, by file name: header first, then the
+    data rows as a sorted multiset."""
+    found = {}
+    for sub in ("exports", "errors"):
+        d = os.path.join(out_dir, sub)
+        for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
+            if name.endswith(".csv"):
+                rows = _csv_rows(os.path.join(d, name))
+                found[name] = [rows[0]] + sorted(rows[1:])
+    return found
+
+
+def _write_fixture(tmp_path, csv_text: str, **settings) -> dict:
+    import copy
+
+    src = tmp_path / "employees.csv"
+    src.write_text(csv_text)
+    cfg = copy.deepcopy(CONFIG)
+    ent = cfg["transformations_config"]["employees"]
+    ent["source"] = str(src)
+    ent["settings"].update(settings)
+    return cfg
+
+
+EMAIL_MSG = (
+    "email: string should match pattern "
+    "'^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}$'"
+)
+DATE_MSG = "birthday_on: string should match pattern '^\\d{4}-\\d{2}-\\d{2}$'"
+
+
+def test_output_files_row_multisets(pipeline_result):
+    """All five files hold exactly the fixture's rows: kept rows in both
+    projections, raw values + row + message for schema errors, typed
+    values for the duplicates and the age_gte failure."""
+    _, out_dir = pipeline_result
+    kept = [("1", "Ana2", "ana2@x.com", "51000.0"), ("2", "Bo", "bo@x.com", "60000.0"),
+            ("5", "Ed", "ed@x.com", "55000.0"), ("7", "Gus", "gus@x.com", "65000.0"),
+            ("8", "Hana2", "hana2@x.com", "53000.0"), ("9", "Ivo", "ivo@x.com", "58000.0"),
+            ("10", "Jo", "jo@x.com", "62000.0")]
+    typed_cols = ("company_id", "employee_id", "first_name", "email", "birthday_on",
+                  "salary_amount")
+    assert _outputs(out_dir) == {
+        "personal_data.csv": [("employee_id", "company_id", "first_name", "email")]
+        + sorted((e, "101", n, m) for e, n, m, _ in kept),
+        "contract_data.csv": [("emp_id", "salary_amount")]
+        + sorted((e, s) for e, _, _, s in kept),
+        "employees_schema_validation_errors.csv": [typed_cols + ("row", "errors")] + sorted([
+            # Spark's CSV writer escapes a backslash inside a quoted value
+            ("101", "3", "Cy", "cy-bad-email", "1970-01-01", "70000", "3",
+             EMAIL_MSG.replace("\\", "\\\\")),
+            ("102", "6", "Fi", "fi@x.com", "not-a-date", "45000", "6", DATE_MSG),
+        ]),
+        "employees_duplicates_errors.csv": [typed_cols] + sorted([
+            ("101", "1", "Ana", "ana@x.com", "1980-01-01", "50000.0"),
+            ("101", "8", "Hana", "hana@x.com", "1982-02-02", "52000.0"),
+        ]),
+        "employees_custom_birthday_on_errors.csv": [typed_cols]
+        + [("101", "4", "Di", "di@x.com", "1999-12-31", "40000.0")],
+    }
+    # the schema-error file is in file order: row is the 1-based line
+    rows = _csv_rows(os.path.join(out_dir, "errors", "employees_schema_validation_errors.csv"))
+    assert [r[6] for r in rows[1:]] == ["3", "6"]
+
+
+@pytest.mark.parametrize(
+    "settings",
+    [
+        {},
+        {"duplicate_resolution": "first"},
+        {"duplicate_resolution": "exclude_all"},
+        {"unique_composite": [["employee_id", "company_id"], ["company_id", "salary_amount"]]},
+        {"duplicate_resolution": "exclude_all",
+         "unique_composite": [["company_id"], ["employee_id"]]},
+    ],
+    ids=["last", "first", "exclude_all", "cascade_last", "cascade_exclude_all"],
+)
+def test_routed_run_matches_operator_chain(spark, tmp_path, settings):
+    """The counted run (one routed frame) writes the same files, row for
+    row, as the lazy operator chain (validate, dedupe_cascade, rules),
+    and its summary counts those files' rows."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(tmp_path, CSV, **settings)
+    routed = run_pipeline(
+        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "routed")
+    )
+    run_pipeline(
+        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "chain"),
+        compute_summary=False,
+    )
+    files = _outputs(str(tmp_path / "chain"))
+    assert _outputs(str(tmp_path / "routed")) == files
+
+    def rows(name):
+        return len(files.get(f"employees_{name}_errors.csv", [()])) - 1
+
+    s = routed.summary
+    assert (s.schema_errors, s.duplicates_removed, s.custom_validation_errors,
+            s.valid_records) == (rows("schema_validation"), rows("duplicates"),
+                                 rows("custom_birthday_on"), len(files["personal_data.csv"]) - 1)
+    assert s.total_records == sum(routed.sink_counts.values()) == 12
+
+
+def test_stop_mode_on_custom_rule_raises(spark, tmp_path):
+    """No schema errors, so the stop gate passes; the first failing
+    rule then stops the run with its failure count."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    lines = CSV.splitlines(keepends=True)
+    clean = "".join(l for l in lines if "cy-bad-email" not in l and "not-a-date" not in l)
+    cfg = _write_fixture(tmp_path, clean, custom_validation_mode="stop")
+    with pytest.raises(
+        ValueError,
+        match="Custom validation 'age_gte' failed for 1 rows on field 'birthday_on'",
+    ):
+        run_pipeline(spark, cfg, "employees", today="2026-08-13")
+
+
+def test_no_duplicates_writes_no_duplicates_file(spark, tmp_path):
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    unique = "".join(CSV.splitlines(keepends=True)[:-2])  # drop Ana2 and Hana2
+    cfg = _write_fixture(tmp_path, unique)
+    out_dir = str(tmp_path / "output")
+    result = run_pipeline(spark, cfg, "employees", today="2026-08-13", output_dir=out_dir)
+    assert result.summary.duplicates_removed == 0
+    assert result.summary.valid_records == 7
+    errors = sorted(os.listdir(os.path.join(out_dir, "errors")))
+    assert errors == [
+        "employees_custom_birthday_on_errors.csv",
+        "employees_schema_validation_errors.csv",
+    ]
+
+
+def test_cli_writes_run_record(spark, tmp_path):
+    """The CLI's run.json carries the summary, the rows per sink and
+    the run's wall time and Spark version, as strict JSON."""
+    import json
+
+    import yaml
+
+    from universal_importer_duckdb_spark.plans.pipeline import main
+
+    cfg = _write_fixture(tmp_path, CSV)
+    cfg_path = tmp_path / "config.yaml"
+    cfg_path.write_text(yaml.safe_dump(cfg))
+    out_dir = tmp_path / "output"
+    assert main(["employees", "--config", str(cfg_path), "--output_dir", str(out_dir)]) == 0
+
+    def strict(token):
+        raise ValueError(f"non-finite number {token} in run.json")
+
+    with open(out_dir / "run.json") as f:
+        record = json.load(f, parse_constant=strict)
+    assert record["total_records"] == 12
+    assert record["valid_records"] == 7
+    assert record["schema_errors"] == 2
+    assert record["duplicates_removed"] == 2
+    assert record["custom_validation_errors"] == 1
+    assert record["sink_counts"] == {
+        "kept": 7, "schema_validation": 2, "duplicates": 2, "custom_birthday_on": 1,
+    }
+    assert record["projection_counts"] == {"personal_data": 7, "contract_data": 7}
+    assert record["spark_version"] == spark.version
+    assert record["wall_s"] > 0
+
+
+# Spark jobs of one counted run with export on this fixture: the CSV
+# header read, the routing aggregate (scan + window stage, then the
+# aggregate; it fills the cache), two exports and three error files.
+JOB_BUDGET = 11
+
+
+def test_counted_run_job_and_scan_budget(spark, tmp_path):
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(tmp_path, CSV)
+    sc = spark.sparkContext
+    group = f"budget-{tmp_path.name}"
+    sc.setJobGroup(group, "counted run job budget")
+    try:
+        result = run_pipeline(
+            spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "out")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= JOB_BUDGET, sorted(jobs)
+    # the routed frame reads its source once: no offsets pass, no join
+    plan = result.stage._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan csv") == 1, plan
+
+
+def test_multi_partition_source_rows_match_stamped_order(spark, tmp_path):
+    """A source read as several partitions: the routed run's dense error
+    ``row`` (read-time id plus a per-partition offset from the routing
+    aggregate) equals the ordinal the read-time stamp of the operator
+    chain gives, and every output file agrees."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    header, *lines = CSV.splitlines(keepends=True)
+    src = tmp_path / "parts"
+    src.mkdir()
+    # three files of different sizes, each its own input partition
+    for i, chunk in enumerate((lines[:2], lines[2:7], lines[7:])):
+        (src / f"part{i}.csv").write_text(header + "".join(chunk))
+    cfg = _write_fixture(tmp_path, CSV)
+    cfg["transformations_config"]["employees"]["source"] = str(src)
+    routed = run_pipeline(
+        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "routed")
+    )
+    assert spark.read.option("header", True).csv(str(src)).rdd.getNumPartitions() == 3
+    chain = run_pipeline(
+        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "chain"),
+        compute_summary=False,
+    )
+    assert _outputs(str(tmp_path / "routed")) == _outputs(str(tmp_path / "chain"))
+    got = sorted((r.employee_id, r.row) for r in routed.schema_errors.collect())
+    assert got == sorted((r.employee_id, r.row) for r in chain.schema_errors.collect())
+    assert sorted(r for _, r in got) != [3, 6]  # file order is not line order here

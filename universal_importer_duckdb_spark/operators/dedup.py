@@ -29,11 +29,38 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from universal_importer_duckdb_spark.config.schema_compiler import quote_ident
+
 RESOLUTIONS = ("first", "last", "exclude_all")
 
 
 def _order_list(order_col: str | Sequence[str]) -> list[str]:
     return [order_col] if isinstance(order_col, str) else list(order_col)
+
+
+def dedup_rank_sql(
+    keys: Sequence[str],
+    resolution: str,
+    order_col: str | Sequence[str],
+    scope: str | None = None,
+) -> str:
+    """The window expression (SQL text) that decides one composite
+    key: ``row_number()`` in ingest order (``first``) or reverse ingest
+    order (``last``), or the group size (``exclude_all``). A row is
+    kept iff the value is 1.
+
+    ``scope`` (a SQL boolean) leads the partition, so rows outside the
+    scope (e.g. schema errors, or rows an earlier key of a cascade
+    removed) never rank against rows inside it."""
+    if resolution not in RESOLUTIONS:
+        raise ValueError(f"resolution must be one of {RESOLUTIONS}")
+    part = ([scope] if scope else []) + [quote_ident(k) for k in keys]
+    over = f"PARTITION BY {', '.join(part)}"
+    if resolution == "exclude_all":
+        return f"count(1) OVER ({over})"
+    direction = "ASC" if resolution == "first" else "DESC"
+    order = ", ".join(f"{quote_ident(c)} {direction}" for c in _order_list(order_col))
+    return f"row_number() OVER ({over} ORDER BY {order})"
 
 
 def dedupe(
@@ -50,22 +77,9 @@ def dedupe(
     fully-identical rows are harmless (either pick yields the same
     output content).
     """
-    if resolution not in RESOLUTIONS:
-        raise ValueError(f"resolution must be one of {RESOLUTIONS}")
-    if resolution == "exclude_all":
-        w = Window.partitionBy(*keys)
-        counted = df.withColumn("__cnt", F.count(F.lit(1)).over(w))
-        kept = counted.filter(F.col("__cnt") == 1).drop("__cnt")
-        dups = counted.filter(F.col("__cnt") > 1).drop("__cnt")
-        return kept, dups
-    cols = _order_list(order_col)
-    ordering = [
-        (F.col(c).asc() if resolution == "first" else F.col(c).desc()) for c in cols
-    ]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    ranked = df.withColumn("__rn", F.row_number().over(w))
-    kept = ranked.filter(F.col("__rn") == 1).drop("__rn")
-    dups = ranked.filter(F.col("__rn") > 1).drop("__rn")
+    ranked = df.selectExpr("*", f"{dedup_rank_sql(keys, resolution, order_col)} AS __rn")
+    kept = ranked.filter("__rn = 1").drop("__rn")
+    dups = ranked.filter("__rn > 1").drop("__rn")
     return kept, dups
 
 

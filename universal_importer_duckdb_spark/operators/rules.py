@@ -103,6 +103,17 @@ def referential_check(
     return referenced, orphans
 
 
+def rule_failure(rule: dict[str, Any], today: str) -> Column | None:
+    """The failure Column of one configured rule (True = the row
+    fails; NULL = the predicate could not be evaluated, which keeps
+    the row, matching the reference's DELETE semantics), or None for
+    an unknown rule name."""
+    builder = RULE_REGISTRY.get(rule.get("validation"))
+    if builder is None:
+        return None
+    return builder(rule.get("field"), rule.get("params", {}), today)
+
+
 def execute_custom_validations(
     df: DataFrame,
     rules: list[dict[str, Any]],
@@ -130,19 +141,16 @@ def execute_custom_validations(
         name = rule.get("validation")
         field = rule.get("field")
         params = rule.get("params", {})
-        builder = RULE_REGISTRY.get(name)
-        if builder is None:
+        fail = rule_failure(rule, today)
+        if fail is None:
             issues.append({"field": field, "validation": name, "params": params,
                            "invalid": None, "skipped": True})
             continue
-        fail = builder(field, params, today)
         invalid = kept.filter(fail)
         if mode == "stop":
             n = invalid.count()
             if n > 0:
-                raise ValueError(
-                    f"Custom validation '{name}' failed for {n} rows on field '{field}'"
-                )
+                raise ValueError(stop_message(rule, n))
         else:
             if observe_invalid is not None:
                 from pyspark.sql import Observation
@@ -157,3 +165,11 @@ def execute_custom_validations(
         issues.append({"field": field, "validation": name, "params": params,
                        "invalid": invalid, "skipped": False})
     return kept, issues
+
+
+def stop_message(rule: dict[str, Any], n: int) -> str:
+    """The stop-mode error for a rule that ``n`` rows fail."""
+    return (
+        f"Custom validation '{rule.get('validation')}' failed for {n} rows "
+        f"on field '{rule.get('field')}'"
+    )

@@ -20,14 +20,17 @@ Semantics parity with the reference:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from universal_importer_duckdb_spark.config.schema_compiler import (
-    SPARK_CAST,
     CompiledSchema,
+    quote_ident,
+    sql_literal,
+    typed_sql,
 )
 
 ERRORS_COL = "errors"
@@ -35,14 +38,82 @@ ROW_COL = "row"
 FLAG_COL = "__errs"
 
 
+def declared_frame(
+    df: DataFrame,
+    schema: CompiledSchema,
+    fillna: dict[str, Any] | None = None,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """The declared columns as read, in schema order, plus ``keep``.
+
+    Missing declared columns become NULL (Pydantic would fail them as
+    missing; the required/type constraints handle that uniformly).
+    ``fillna`` and, with ``schema.apply_defaults``, the declared
+    defaults are applied here, before any constraint sees a value."""
+    available = set(df.columns)
+    base = df.selectExpr(
+        *[
+            quote_ident(c) if c in available else f"CAST(NULL AS string) AS {quote_ident(c)}"
+            for c in schema.columns
+        ],
+        *[quote_ident(k) for k in keep],
+    )
+    if fillna:
+        base = base.na.fill({k: v for k, v in fillna.items() if k in schema.columns})
+    if schema.apply_defaults:
+        # Substitute declared defaults for NULL/missing raw values
+        # (config `default` key — parsed-but-ignored by the reference;
+        # opt-in here via compile_schema(apply_defaults=True)). The
+        # literal is cast to the column's CURRENT (raw) type so the
+        # coercion constraints downstream treat it exactly like a
+        # supplied value.
+        raw = base.schema
+        base = base.selectExpr(
+            *[
+                f"coalesce({quote_ident(fs.name)}, CAST({sql_literal(fs.default)} AS "
+                f"{raw[fs.name].dataType.simpleString()})) AS {quote_ident(fs.name)}"
+                if fs.default is not None
+                else quote_ident(fs.name)
+                for fs in schema.fields
+            ],
+            *[quote_ident(k) for k in keep],
+        )
+    return base
+
+
+def flag_sql(schema: CompiledSchema) -> str:
+    """True when any constraint fails. NOTE no array/higher-order
+    functions on purpose — an array_compact over dozens of nested CASE
+    WHEN trees triggers quadratic expression re-canonicalization in
+    Catalyst (heap blowup at ~60 constraints). A flat boolean OR chain
+    + concat_ws (which skips NULLs) expresses the same semantics as
+    plain trees."""
+    flags = [f"coalesce({c.sql}, FALSE)" for c in schema.constraints]
+    return " OR ".join(flags) if flags else "FALSE"
+
+
+def errors_sql(schema: CompiledSchema) -> str:
+    """The "; "-joined "field: message" items of the failing checks."""
+    msgs = [
+        f"CASE WHEN {c.sql} THEN {sql_literal(f'{c.field}: {c.message}')} END"
+        for c in schema.constraints
+    ]
+    return f"concat_ws('; ', {', '.join(msgs)})" if msgs else "''"
+
+
+def typed_columns_sql(schema: CompiledSchema) -> list[str]:
+    """Each declared column coerced to its declared type, under its
+    own name."""
+    return [f"{typed_sql(fs)} AS {quote_ident(fs.name)}" for fs in schema.fields]
+
+
 def validate_dataframe(
     df: DataFrame,
     schema: CompiledSchema,
     fillna: dict[str, Any] | None = None,
     ingest_ord: str | None = None,
-    return_flagged: bool = False,
     observe_with=None,
-) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Split ``df`` into (valid, errors) under the compiled schema.
 
     ``valid`` has exactly the declared columns, coerced to their
@@ -50,75 +121,31 @@ def validate_dataframe(
     has the declared columns as read (uncoerced), plus ``row`` and
     ``errors`` columns.
 
+    The lineage is declared with one ``selectExpr`` per output over
+    the schema's SQL-text constraints.
+
     ``observe_with`` (a ``pyspark.sql.Observation``) plants a metrics
     node on the flagged frame — ``total`` and ``schema_errors`` become
     available from the observation after ANY downstream action
     touches the lineage, costing zero extra passes (the one-action
     funnel; see plans/pipeline.py compute_summary="observe").
     """
-    available = set(df.columns)
-    # Missing declared columns become NULL (Pydantic would fail them as
-    # missing; the required/type constraints handle that uniformly).
-    selected = [
-        (F.col(c) if c in available else F.lit(None).cast("string")).alias(c)
-        for c in schema.columns
-    ]
-    if ingest_ord and ingest_ord in available:
-        selected.append(F.col(ingest_ord))
-    base = df.select(*selected)
-    if fillna:
-        base = base.na.fill({k: v for k, v in fillna.items() if k in schema.columns})
-    if schema.apply_defaults:
-        # Substitute declared defaults for NULL/missing raw values
-        # before any constraint sees them (config `default` key —
-        # parsed-but-ignored by the reference; opt-in here via
-        # compile_schema(apply_defaults=True)). The literal is cast to
-        # the column's CURRENT (raw) type so the coercion constraints
-        # downstream treat it exactly like a supplied value.
-        base = base.select(
-            *[
-                F.coalesce(
-                    F.col(fs.name), F.lit(fs.default).cast(base.schema[fs.name].dataType)
-                ).alias(fs.name)
-                if fs.default is not None
-                else F.col(fs.name)
-                for fs in schema.fields
-            ],
-            *[c for c in base.columns if c not in schema.columns],
-        )
-
-    # NOTE: no array/higher-order functions here on purpose — an
-    # array_compact over dozens of nested CASE WHEN trees triggers
-    # quadratic expression re-canonicalization in Catalyst (heap
-    # blowup at ~60 constraints). A flat boolean OR chain + concat_ws
-    # (which skips NULLs) expresses the same semantics as plain trees.
-    fail_flags = [F.coalesce(c.fail, F.lit(False)) for c in schema.constraints]
-    has_err = fail_flags[0] if fail_flags else F.lit(False)
-    for f_ in fail_flags[1:]:
-        has_err = has_err | f_
-    msgs = [
-        F.when(c.fail, F.lit(f"{c.field}: {c.message}")) for c in schema.constraints
-    ]
-    flagged = base.withColumn(FLAG_COL, has_err)
+    keep = [ingest_ord] if ingest_ord and ingest_ord in df.columns else []
+    base = declared_frame(df, schema, fillna, keep)
+    flagged = base.selectExpr("*", f"{flag_sql(schema)} AS {FLAG_COL}")
     if observe_with is not None:
         flagged = flagged.observe(
             observe_with,
-            F.count(F.lit(1)).alias("total"),
-            F.count_if(F.col(FLAG_COL)).alias("schema_errors"),
+            F.expr("count(1)").alias("total"),
+            F.expr(f"count_if({FLAG_COL})").alias("schema_errors"),
         )
-
-    valid = flagged.filter(~F.col(FLAG_COL)).select(
-        *[F.col(f.name).try_cast(SPARK_CAST[f.type]).alias(f.name) for f in schema.fields],
-        *([F.col(ingest_ord)] if ingest_ord and ingest_ord in available else []),
+    valid = flagged.filter(f"NOT {FLAG_COL}").selectExpr(
+        *typed_columns_sql(schema), *[quote_ident(k) for k in keep]
     )
-    errors = flagged.filter(F.col(FLAG_COL))
-    if ingest_ord and ingest_ord in available:
-        errors = errors.withColumn(ROW_COL, F.col(ingest_ord).cast("bigint"))
-    else:
-        errors = errors.withColumn(ROW_COL, F.lit(None).cast("bigint"))
-    errors = errors.withColumn(
-        ERRORS_COL, F.concat_ws("; ", *msgs) if msgs else F.lit("")
-    ).select(*schema.columns, ROW_COL, ERRORS_COL)
-    if return_flagged:
-        return valid, errors, flagged
+    row = f"CAST({quote_ident(keep[0])} AS bigint)" if keep else "CAST(NULL AS bigint)"
+    errors = flagged.filter(FLAG_COL).selectExpr(
+        *[quote_ident(c) for c in schema.columns],
+        f"{row} AS {ROW_COL}",
+        f"{errors_sql(schema)} AS {ERRORS_COL}",
+    )
     return valid, errors

@@ -2,10 +2,20 @@
 ``main`` driver, main.py:401-505).
 
 Stages: read → schema-validate → (stop gate) → dedup cascade → custom
-rules → projections → export → summary. Each stage returns
-``(kept, rejected)``; nothing is mutated. The post-validation frame is
-cached because dedup, rules, and projections all fan out from it
-(SURVEY.md §4.3.2).
+rules → projections → export → summary.
+
+The counted run (``compute_summary=True``, the CLI's path) is one
+pass over one routed frame, like the reference's one stage table:
+every source row is validated, ranked once per dedup key and given a
+``_sink`` — ``schema_validation``, ``duplicates``, ``custom_<field>``
+(the first rule it fails, in config order) or ``kept``. That frame is
+cached once; a single ``groupBy("_sink", <partition>)`` aggregate
+fills the cache and returns every summary number (plus the
+per-partition sizes that turn the read-time row id into the dense
+1-based error ``row``), and each output — the stage, the projections,
+each error file — is a filter of the cache. The lazy runs
+(``compute_summary=False`` / ``"observe"``) keep the stage-by-stage
+operator chain, where each stage returns ``(kept, rejected)``.
 
 Scale notes: validation is a narrow map (no shuffle); the only
 shuffles are one per dedup composite key. Projections run through
@@ -16,26 +26,57 @@ pushdown / column pruning / join strategies from Catalyst for free.
 from __future__ import annotations
 
 import argparse
-from dataclasses import dataclass, field
+import datetime as _dt
+import json
+import os
+import time
+from dataclasses import asdict, dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from universal_importer_duckdb_spark.caching import release_scoped, scoped_cache
 from universal_importer_duckdb_spark.config.loader import load_config, validate_config
-from universal_importer_duckdb_spark.config.schema_compiler import compile_schema
-from universal_importer_duckdb_spark.operators.dedup import dedupe_cascade
+from universal_importer_duckdb_spark.config.schema_compiler import (
+    CompiledSchema,
+    compile_schema,
+    quote_ident,
+    sql_literal,
+)
+from universal_importer_duckdb_spark.operators.dedup import dedup_rank_sql, dedupe_cascade
 from universal_importer_duckdb_spark.operators.project import create_projections
-from universal_importer_duckdb_spark.operators.rules import execute_custom_validations
+from universal_importer_duckdb_spark.operators.rules import (
+    execute_custom_validations,
+    rule_failure,
+    stop_message,
+)
 from universal_importer_duckdb_spark.operators.summary import RunSummary
-from universal_importer_duckdb_spark.operators.validate import validate_dataframe
+from universal_importer_duckdb_spark.operators.validate import (
+    ERRORS_COL,
+    FLAG_COL,
+    ROW_COL,
+    declared_frame,
+    errors_sql,
+    flag_sql,
+    typed_columns_sql,
+    validate_dataframe,
+)
 from universal_importer_duckdb_spark.sources.readers import (
     INGEST_ORD,
     read_csv_with_ingest_order,
     with_ingest_order,
 )
 from universal_importer_duckdb_spark.sources.writers import export_csv, save_errors
+
+SINK = "_sink"
+KEPT = "kept"
+SCHEMA_SINK = "schema_validation"
+DUP_SINK = "duplicates"
+# read-time row id of the routed run: monotonically_increasing_id, i.e.
+# (partition index << 33) + row index within the partition
+_MID = "__mid"
+_MSG = "__msg"
 
 
 @dataclass
@@ -51,6 +92,22 @@ class PipelineResult:
     # (validate / post-dedup / per-rule); harvested lazily by
     # finalize_observed_summary after ONE action touches the stage
     observations: dict[str, Any] = field(default_factory=dict)
+    # counted run: rows per _sink, from the routing aggregate
+    sink_counts: dict[str, int] = field(default_factory=dict)
+
+
+@dataclass
+class _Spec:
+    """One entity's config, parsed."""
+
+    entity: str
+    source: str
+    schema: CompiledSchema
+    rules: list[dict[str, Any]]
+    keys: list[list[str]]
+    resolution: str
+    mode: str
+    projections: list[dict[str, Any]]
 
 
 def run_pipeline(
@@ -67,14 +124,23 @@ def run_pipeline(
 ) -> PipelineResult:
     """Run the full pipeline for ``entity``.
 
-    ``source_df`` overrides the config ``source`` CSV (must carry an
-    ``_ingest_ord`` column or a unique ordering is derived from it).
+    ``source_df`` overrides the config ``source`` CSV. Its
+    ``_ingest_ord`` column, if any, is the ingest order and the error
+    ``row``; without one, file order is stamped at read time.
+    ``order_cols`` orders dedup by those columns instead (error
+    ``row`` is then NULL).
+
+    ``compute_summary=True`` routes every row once (module docstring):
+    one cached frame, one aggregate for the whole summary, then one
+    write per output. Projection counts ride their export writes as
+    ``Observation``s, or are counted when there is no ``output_dir``.
+    ``result.sink_counts`` holds the aggregate's rows per sink.
 
     ``compute_summary=False`` skips every counting action and the
-    fan-out caches, leaving ``result.summary`` None — the whole run
-    then declares ONE lineage with zero Spark jobs, for callers that
-    only consume ``result.stage``/``result.projections`` (the stop
-    gate still runs its one count when mode is 'stop').
+    cache, leaving ``result.summary`` None — the whole run then
+    declares ONE lineage with zero Spark jobs, for callers that only
+    consume ``result.stage``/``result.projections`` (the stop gate
+    still runs its one count when mode is 'stop').
 
     ``compute_summary="observe"`` builds the same zero-job single
     lineage but plants ``Observation`` metric nodes at every funnel
@@ -82,153 +148,292 @@ def run_pipeline(
     action that consumes ``result.stage`` — an export, a count, a
     downstream aggregation — computes every funnel number as a side
     effect of its one pass; call :func:`finalize_observed_summary`
-    afterwards to materialize ``result.summary``. At 100 TB this is
-    the difference between the funnel costing one extra full scan per
-    boundary and costing nothing. (Projection counts are not
-    observed: projections are independent fan-out queries; their
-    counts stay with the classic mode or the export path.)
+    afterwards to materialize ``result.summary``. (Projection counts
+    are not observed: projections are independent fan-out queries.)
     """
-    observe = compute_summary == "observe"
-    if observe:
-        compute_summary = False
     details = validate_config(config, entity)
     settings = details.get("settings", {})
-    schema_cfg = details.get("validations", {}).get("schema", {}).get("fields", {})
-    rules = details.get("validations", {}).get("custom", {}).get("rules", [])
-    schema = compile_schema(schema_cfg, strict_required=strict_required)
+    validations = details.get("validations", {})
+    spec = _Spec(
+        entity=entity,
+        source=details["source"],
+        schema=compile_schema(
+            validations.get("schema", {}).get("fields", {}), strict_required=strict_required
+        ),
+        rules=validations.get("custom", {}).get("rules", []),
+        keys=settings.get("unique_composite", []) or [],
+        resolution=settings.get("duplicate_resolution", "first"),
+        mode=settings.get("custom_validation_mode", "skip"),
+        projections=details.get("projections", []),
+    )
+    today = today or _dt.date.today().isoformat()
+    if compute_summary is True:
+        return _run_routed(spark, spec, source_df, today, output_dir, fillna, order_cols)
+    return _run_lazy(
+        spark, spec, source_df, today, output_dir, fillna, order_cols,
+        observe=compute_summary == "observe",
+    )
 
+
+def _check_order_cols(spec: _Spec, order_cols: list[str] | None, columns: list[str]) -> None:
+    """Caller-named ordering columns must exist — never silently skip
+    dedup (a data-correctness trap)."""
+    missing = [c for c in order_cols or [] if c not in columns]
+    if spec.keys and missing:
+        raise ValueError(
+            f"unique_composite dedup for '{spec.entity}' needs order columns "
+            f"{missing} that are absent from the frame"
+        )
+
+
+def _run_routed(
+    spark: SparkSession,
+    spec: _Spec,
+    source_df: DataFrame | None,
+    today: str,
+    output_dir: str | None,
+    fillna: dict[str, Any] | None,
+    order_cols: list[str] | None,
+) -> PipelineResult:
+    schema, cols = spec.schema, spec.schema.columns
     if source_df is None:
-        source_df = read_csv_with_ingest_order(spark, details["source"])
-    result = PipelineResult(entity=entity)
-    summary = RunSummary(entity=entity)
+        source_df = spark.read.option("header", True).option("inferSchema", False).csv(
+            spec.source
+        )
+    keep = [INGEST_ORD] if INGEST_ORD in source_df.columns else []
+    _check_order_cols(spec, order_cols, cols + keep)
+    if order_cols:
+        order = order_cols
+    elif keep:
+        order = keep
+    else:
+        # file order, stamped JVM-side at the scan; the dense ordinal
+        # comes from the routing aggregate, so no offsets job is needed
+        source_df = source_df.selectExpr("*", f"monotonically_increasing_id() AS {_MID}")
+        keep = order = [_MID]
+
+    flagged = declared_frame(source_df, schema, fillna, keep).selectExpr(
+        "*", f"{flag_sql(schema)} AS {FLAG_COL}"
+    )
+    # raw values and the message are only read on schema-error rows
+    ranked = flagged.selectExpr(
+        *[
+            f"CASE WHEN {FLAG_COL} THEN {quote_ident(c)} END AS __raw{i}"
+            for i, c in enumerate(cols)
+        ],
+        *typed_columns_sql(schema),
+        f"CASE WHEN {FLAG_COL} THEN {errors_sql(schema)} END AS {_MSG}",
+        *[quote_ident(k) for k in keep],
+        FLAG_COL,
+    )
+    ranks: list[str] = []
+    for i, keys in enumerate(spec.keys):
+        # each key of the cascade ranks only the rows every earlier key kept
+        scope = " AND ".join([f"NOT {FLAG_COL}"] + [f"{r} = 1" for r in ranks])
+        rank = dedup_rank_sql(keys, spec.resolution, order, scope=f"({scope})")
+        ranked = ranked.selectExpr("*", f"{rank} AS __rk{i}")
+        ranks.append(f"__rk{i}")
+
+    sink = F.when(F.col(FLAG_COL), SCHEMA_SINK)
+    if ranks:
+        sink = sink.when(F.expr(" OR ".join(f"{r} <> 1" for r in ranks)), DUP_SINK)
+    # rules sharing a field share its sink (and its error file)
+    issues: list[dict[str, Any]] = []
+    for rule in spec.rules:
+        fail = rule_failure(rule, today)
+        issue = {"field": rule.get("field"), "validation": rule.get("validation"),
+                 "params": rule.get("params", {}), "invalid": None, "skipped": fail is None}
+        if fail is not None:
+            issue["sink"] = f"custom_{rule.get('field')}"
+            sink = sink.when(fail, issue["sink"])
+        issues.append(issue)
+    routed = scoped_cache(
+        ranked.withColumn(SINK, sink.otherwise(KEPT)).drop(FLAG_COL, *ranks)
+    )
+
+    # THE action: fills the cache and counts every sink, per partition
+    by = [F.col(SINK)]
+    if keep == [_MID]:
+        by.append(F.expr(f"shiftright({_MID}, 33)").alias("pid"))
+    aggs = routed.groupBy(*by).agg(
+        F.expr("count(1)").alias("n"),
+        *([F.expr(f"min({_MID})").alias("lo")] if keep == [_MID] else []),
+    ).collect()
+    counts: dict[str, int] = {}
+    for r in aggs:
+        counts[r[SINK]] = counts.get(r[SINK], 0) + r["n"]
+
+    result = PipelineResult(entity=spec.entity, sink_counts=counts, custom_issues=issues)
+    if spec.mode == "stop":
+        failed = [(SCHEMA_SINK, None)] + [(i["sink"], i) for i in issues if not i["skipped"]]
+        for name, issue in failed:
+            n = counts.get(name, 0)
+            if n:
+                routed.unpersist()
+                if issue is None:
+                    raise ValueError(
+                        f"Schema validation failed for {n} rows in '{spec.entity}'"
+                    )
+                raise ValueError(stop_message(issue, n))
+
+    def sink_rows(name: str) -> DataFrame:
+        return routed.filter(f"{SINK} = {sql_literal(name)}")
+
+    typed_q = [quote_ident(c) for c in cols]
+    if keep == [_MID]:
+        row = _dense_ordinal(aggs)
+    elif INGEST_ORD in keep:
+        row = f"CAST({quote_ident(INGEST_ORD)} AS bigint)"
+    else:
+        row = "CAST(NULL AS bigint)"
+    result.schema_errors = sink_rows(SCHEMA_SINK).selectExpr(
+        *[f"__raw{i} AS {quote_ident(c)}" for i, c in enumerate(cols)],
+        f"{row} AS {ROW_COL}",
+        f"{_MSG} AS {ERRORS_COL}",
+    )
+    result.duplicates = sink_rows(DUP_SINK).selectExpr(*typed_q)
+    for issue in issues:
+        if not issue["skipped"]:
+            issue["invalid"] = sink_rows(issue["sink"]).selectExpr(*typed_q)
+    result.stage = sink_rows(KEPT).selectExpr(*typed_q)
+    result.stage.createOrReplaceTempView(f"{spec.entity}_stage")
+    result.projections = create_projections(
+        spark, spec.entity, result.stage, spec.projections, cols
+    )
+
+    result.summary = summary = RunSummary(
+        entity=spec.entity,
+        total_records=sum(counts.values()),
+        valid_records=counts.get(KEPT, 0),
+        schema_errors=counts.get(SCHEMA_SINK, 0),
+        custom_validation_errors=sum(
+            n for s, n in counts.items() if s not in (KEPT, SCHEMA_SINK, DUP_SINK)
+        ),
+        duplicates_removed=counts.get(DUP_SINK, 0),
+    )
+    if not output_dir:
+        summary.projection_counts = {n: df.count() for n, df in result.projections.items()}
+        return result
+    observed = {name: Observation() for name in result.projections}
+    export_csv(
+        {
+            name: df.observe(observed[name], F.expr("count(1)").alias("n"))
+            for name, df in result.projections.items()
+        },
+        output_dir,
+    )
+    summary.projection_counts = {name: ob.get["n"] for name, ob in observed.items()}
+    # empty sinks write no file (the reference writes nothing then);
+    # the schema-error file keeps file order, as the reference's does
+    if counts.get(SCHEMA_SINK):
+        ordered = result.schema_errors.coalesce(1).sortWithinPartitions(ROW_COL)
+        save_errors(spec.entity, SCHEMA_SINK, ordered, output_dir)
+    if counts.get(DUP_SINK):
+        save_errors(spec.entity, DUP_SINK, result.duplicates, output_dir)
+    for issue in issues:
+        if not issue["skipped"] and counts.get(issue["sink"]):
+            save_errors(spec.entity, issue["sink"], issue["invalid"], output_dir)
+    return result
+
+
+def _dense_ordinal(aggs: list) -> str:
+    """SQL for the dense 1-based file-order ordinal of a row stamped
+    with ``_MID``, from the aggregate's per-partition (count, min id):
+    ``id + offset[id >> 33]`` through a literal map, so neither an
+    offsets job nor a join is needed."""
+    parts: dict[int, list[int]] = {}
+    for r in aggs:
+        p = parts.setdefault(r["pid"], [0, r["lo"]])
+        p[0] += r["n"]
+        p[1] = min(p[1], r["lo"])
+    offsets, before = [], 0
+    for pid in sorted(parts):
+        n, lo = parts[pid]
+        offsets.append((pid, before - lo + 1))
+        before += n
+    if len(offsets) == 1:
+        return f"({_MID} + {offsets[0][1]})"
+    pairs = ", ".join(f"{pid}, {off}" for pid, off in offsets)
+    return f"({_MID} + element_at(map({pairs}), shiftright({_MID}, 33)))"
+
+
+def _run_lazy(
+    spark: SparkSession,
+    spec: _Spec,
+    source_df: DataFrame | None,
+    today: str,
+    output_dir: str | None,
+    fillna: dict[str, Any] | None,
+    order_cols: list[str] | None,
+    observe: bool,
+) -> PipelineResult:
+    if source_df is None:
+        source_df = read_csv_with_ingest_order(spark, spec.source)
+    result = PipelineResult(entity=spec.entity)
 
     ingest = INGEST_ORD if INGEST_ORD in source_df.columns else None
     obs_val = None
     if observe:
-        from pyspark.sql import Observation
-
         obs_val = Observation()
         result.observations["validate"] = obs_val
-    valid, errors, flagged = validate_dataframe(
-        source_df, schema, fillna=fillna, ingest_ord=ingest,
-        return_flagged=True, observe_with=obs_val,
+    valid, errors = validate_dataframe(
+        source_df, spec.schema, fillna=fillna, ingest_ord=ingest, observe_with=obs_val
     )
     result.schema_errors = errors
-    # Action economy: ONE aggregation pass yields total + error counts
-    # (valid is not cached — it is consumed exactly once, by the dedup
-    # window; caching it costs more than the one recomputation).
-    from universal_importer_duckdb_spark.operators.validate import FLAG_COL
-
-    mode = settings.get("custom_validation_mode", "skip")
-    if compute_summary:
-        crow = flagged.agg(
-            F.count(F.lit(1)).alias("t"),
-            F.count_if(F.col(FLAG_COL)).alias("e"),
-        ).collect()[0]
-        summary.total_records = crow.t
-        summary.schema_errors = crow.e
-        summary.valid_records = crow.t - crow.e
-        n_schema_errors = crow.e
-    elif mode == "stop":
-        # summary skipped, but the gate still needs this one count
-        n_schema_errors = errors.count()
-    else:
-        n_schema_errors = 0
 
     # Stop gate: the reference reuses custom_validation_mode for this
     # decision (main.py:435-439 — setting conflation, kept for parity).
-    if n_schema_errors > 0 and mode == "stop":
-        raise ValueError(
-            f"Schema validation failed for {n_schema_errors} rows in '{entity}'"
-        )
-
-    composite_keys = settings.get("unique_composite", []) or []
-    resolution = settings.get("duplicate_resolution", "first")
-    order: list[str] = order_cols or [ingest or INGEST_ORD]
-    if composite_keys:
-        missing = [c for c in order if c not in valid.columns]
-        if missing and order_cols:
-            # caller named ordering columns that don't exist — never
-            # silently skip dedup (a data-correctness trap)
+    if spec.mode == "stop":
+        n_schema_errors = errors.count()
+        if n_schema_errors > 0:
             raise ValueError(
-                f"unique_composite dedup for '{entity}' needs order columns "
-                f"{missing} that are absent from the frame"
+                f"Schema validation failed for {n_schema_errors} rows in '{spec.entity}'"
             )
-        if missing:
+
+    order: list[str] = order_cols or [ingest or INGEST_ORD]
+    if spec.keys:
+        _check_order_cols(spec, order_cols, valid.columns)
+        if not order_cols and not ingest:
             # caller-supplied source_df without _ingest_ord and no
             # order_cols: derive an ingest order (JVM-side stamp) so
             # dedup ALWAYS runs when configured, as in the reference
             valid = with_ingest_order(valid)
-            order = [INGEST_ORD]
-        # Both outputs derive from the same windowed intermediate, so
-        # the per-key shuffle is computed once per action branch; at the
-        # pipeline's low dup rates the window's WindowGroupLimit
-        # pre-filter beats the min_by aggregation form (measured at
-        # sf0.1 — see operators/dedup.py). dedupe_cascade_keep_only
-        # remains the pick for duplicate-heavy kept-only consumers.
-        kept, dups = dedupe_cascade(valid, composite_keys, resolution, order)
+        kept, dups = dedupe_cascade(valid, spec.keys, spec.resolution, order)
         if observe:
-            from pyspark.sql import Observation
-
             obs_kept = Observation()
-            kept = kept.observe(
-                obs_kept, F.count(F.lit(1)).alias("kept")
-            )
+            kept = kept.observe(obs_kept, F.count(F.lit(1)).alias("kept"))
             result.observations["dedup_kept"] = obs_kept
-        if compute_summary:
-            # cache the kept side (rules + projections + counts fan out
-            # of it); duplicates_removed is derived arithmetically so
-            # the dups branch is only computed when exporting errors
-            kept = scoped_cache(kept)
-            summary.duplicates_removed = summary.valid_records - kept.count()
     else:
-        kept, dups = (scoped_cache(valid) if compute_summary else valid), valid.limit(0)
-        summary.duplicates_removed = 0
+        kept, dups = valid, valid.limit(0)
     result.duplicates = dups
 
-    kept_count = summary.valid_records - summary.duplicates_removed
-    rule_obs: list | None = [] if (observe and mode == "skip") else None
+    rule_obs: list | None = [] if (observe and spec.mode == "skip") else None
     kept, issues = execute_custom_validations(
-        kept, rules, mode=mode, today=today, observe_invalid=rule_obs
+        kept, spec.rules, mode=spec.mode, today=today, observe_invalid=rule_obs
     )
     if rule_obs is not None:
         result.observations["rules"] = rule_obs
     result.custom_issues = issues
-    if compute_summary:
-        summary.custom_validation_errors = sum(
-            issue["invalid"].count() for issue in issues if issue.get("invalid") is not None
-        )
 
     stage = kept.drop(INGEST_ORD) if INGEST_ORD in kept.columns else kept
-    if compute_summary:
-        stage = scoped_cache(stage)
     result.stage = stage
-    stage.createOrReplaceTempView(f"{entity}_stage")
-
+    stage.createOrReplaceTempView(f"{spec.entity}_stage")
     result.projections = create_projections(
-        spark, entity, stage, details.get("projections", []), schema.columns
+        spark, spec.entity, stage, spec.projections, spec.schema.columns
     )
-    if compute_summary:
-        for name, df in result.projections.items():
-            summary.projection_counts[name] = df.count()
-        # final record count: skip mode removed exactly the per-rule
-        # invalid rows (null-predicate rows are kept, matching the
-        # reference's DELETE semantics), so no extra scan is needed
-        summary.valid_records = kept_count - (
-            summary.custom_validation_errors if mode == "skip" else 0
-        )
-        result.summary = summary
 
     if output_dir:
         def _clean(edf: DataFrame) -> DataFrame:
             return edf.drop(INGEST_ORD) if INGEST_ORD in edf.columns else edf
 
         export_csv(result.projections, output_dir)
-        save_errors(entity, "schema_validation", errors, output_dir)
-        save_errors(entity, "duplicates", _clean(dups), output_dir)
+        save_errors(spec.entity, SCHEMA_SINK, errors, output_dir)
+        save_errors(spec.entity, DUP_SINK, _clean(dups), output_dir)
         for issue in issues:
             if issue.get("invalid") is not None:
-                save_errors(entity, f"custom_{issue['field']}", _clean(issue["invalid"]), output_dir)
+                save_errors(
+                    spec.entity, f"custom_{issue['field']}", _clean(issue["invalid"]), output_dir
+                )
     return result
 
 
@@ -269,7 +474,11 @@ def finalize_observed_summary(result: PipelineResult) -> RunSummary:
 def main(argv: list[str] | None = None) -> int:
     """CLI mirroring the reference (main.py:402-406):
     ``python -m universal_importer_duckdb_spark.plans.pipeline <entity>
-    [--config config.yaml] [--output_dir output]``."""
+    [--config config.yaml] [--output_dir output]``.
+
+    Besides the exports and error files it writes
+    ``<output_dir>/run.json`` (strict JSON): the summary fields, rows
+    per sink from the routing aggregate, wall time and Spark version."""
     from universal_importer_duckdb_spark.session import get_spark
 
     parser = argparse.ArgumentParser(description="Run the import pipeline for an entity")
@@ -282,8 +491,10 @@ def main(argv: list[str] | None = None) -> int:
     # (reference main.py:496-505: print and exit, no traceback)
     try:
         spark = get_spark(app_name=f"pipeline-{args.entity}")
+        t0 = time.perf_counter()
         config = load_config(args.config)
         result = run_pipeline(spark, config, args.entity, output_dir=args.output_dir)
+        wall_s = time.perf_counter() - t0
     except FileNotFoundError as e:
         print(f"File not found: {e}")
         return 1
@@ -294,7 +505,15 @@ def main(argv: list[str] | None = None) -> int:
         print(f"Validation error: {e}")
         return 1
     print(result.summary.report())
-    # CLI is the terminal consumer: release the run's fan-out caches so
+    record = asdict(result.summary) | {
+        "sink_counts": result.sink_counts,
+        "wall_s": round(wall_s, 3),
+        "spark_version": spark.version,
+    }
+    os.makedirs(args.output_dir, exist_ok=True)
+    with open(os.path.join(args.output_dir, "run.json"), "w") as f:
+        json.dump(record, f, indent=2, allow_nan=False)
+    # CLI is the terminal consumer: release the run's cache so
     # repeated invocations in one long-lived session don't accumulate
     release_scoped(spark)
     return 0

@@ -14,7 +14,8 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def _single_csv(df: DataFrame, final_path: str) -> str:
@@ -42,12 +43,22 @@ def save_errors(
 ) -> str | None:
     """``{output_dir}/errors/{entity}_{error_type}_errors.csv`` —
     naming contract from reference main.py:367-399. Returns None when
-    there are no error rows (reference writes nothing then)."""
-    if df is None or df.isEmpty():
+    there are no error rows (reference writes nothing then).
+
+    One write: its row count rides the write as an ``Observation``,
+    and a file that received no rows is removed again, so no separate
+    emptiness probe re-runs the lineage."""
+    if df is None:
         return None
-    return _single_csv(
-        df, os.path.join(output_dir, "errors", f"{entity}_{error_type}_errors.csv")
+    obs = Observation()
+    path = _single_csv(
+        df.observe(obs, F.count(F.lit(1)).alias("n")),
+        os.path.join(output_dir, "errors", f"{entity}_{error_type}_errors.csv"),
     )
+    if obs.get["n"] == 0:
+        os.remove(path)
+        return None
+    return path
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> str:

@@ -157,7 +157,8 @@ def test_caller_frame_without_ingest_ord_still_dedups(spark, tmp_path):
     """unique_composite configured + caller-supplied source_df with no
     _ingest_ord and no order_cols: an ingest order is derived so dedup
     ALWAYS runs (silently skipping it would leak duplicates into every
-    projection — the reference always dedups)."""
+    projection — the reference always dedups), in the counted and the
+    lazy run alike."""
     import copy
 
     from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
@@ -176,6 +177,14 @@ def test_caller_frame_without_ingest_ord_still_dedups(spark, tmp_path):
     )
     assert result.summary.duplicates_removed == 2
     assert result.stage.count() == 7
+    lazy = run_pipeline(
+        spark, cfg, "employees", source_df=df, today="2026-08-13", compute_summary=False
+    )
+    assert lazy.stage.columns == result.stage.columns
+    kept = sorted(lazy.stage.collect())
+    assert kept == sorted(result.stage.collect())
+    # 'last' resolution in file order: the later copies survive
+    assert len(kept) == 7 and {"Ana2", "Hana2"} <= {r.first_name for r in kept}
 
 
 def test_missing_explicit_order_cols_raise(spark, tmp_path):
@@ -272,21 +281,24 @@ def test_output_files_row_multisets(pipeline_result):
 
 
 @pytest.mark.parametrize(
-    "settings",
+    "settings, expected",
     [
-        {},
-        {"duplicate_resolution": "first"},
-        {"duplicate_resolution": "exclude_all"},
-        {"unique_composite": [["employee_id", "company_id"], ["company_id", "salary_amount"]]},
-        {"duplicate_resolution": "exclude_all",
-         "unique_composite": [["company_id"], ["employee_id"]]},
+        ({}, (12, 7, 2, 2, 1)),
+        ({"duplicate_resolution": "first"}, (12, 7, 2, 2, 1)),
+        ({"duplicate_resolution": "exclude_all"}, (12, 5, 2, 4, 1)),
+        ({"unique_composite": [["employee_id", "company_id"], ["company_id", "salary_amount"]]},
+         (12, 7, 2, 2, 1)),
+        # every valid row shares company 101: the stage ends up empty
+        ({"duplicate_resolution": "exclude_all",
+          "unique_composite": [["company_id"], ["employee_id"]]}, (12, 0, 2, 10, 0)),
     ],
     ids=["last", "first", "exclude_all", "cascade_last", "cascade_exclude_all"],
 )
-def test_routed_run_matches_operator_chain(spark, tmp_path, settings):
+def test_routed_run_matches_operator_chain(spark, tmp_path, settings, expected):
     """The counted run (one routed frame) writes the same files, row for
     row, as the lazy operator chain (validate, dedupe_cascade, rules),
-    and its summary counts those files' rows."""
+    and its summary — (total, valid, schema errors, duplicates, custom
+    errors) — counts those files' rows."""
     from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
 
     cfg = _write_fixture(tmp_path, CSV, **settings)
@@ -304,10 +316,27 @@ def test_routed_run_matches_operator_chain(spark, tmp_path, settings):
         return len(files.get(f"employees_{name}_errors.csv", [()])) - 1
 
     s = routed.summary
+    assert (s.total_records, s.valid_records, s.schema_errors, s.duplicates_removed,
+            s.custom_validation_errors) == expected
     assert (s.schema_errors, s.duplicates_removed, s.custom_validation_errors,
             s.valid_records) == (rows("schema_validation"), rows("duplicates"),
                                  rows("custom_birthday_on"), len(files["personal_data.csv"]) - 1)
     assert s.total_records == sum(routed.sink_counts.values()) == 12
+    sinks = {"kept": s.valid_records, "schema_validation": s.schema_errors,
+             "duplicates": s.duplicates_removed, "custom_birthday_on": s.custom_validation_errors}
+    assert routed.sink_counts == {k: n for k, n in sinks.items() if n}
+    # both exports are written, with their header, even when empty
+    assert files["personal_data.csv"][0] == ("employee_id", "company_id", "first_name", "email")
+    assert files["contract_data.csv"][0] == ("emp_id", "salary_amount")
+    assert len(files["contract_data.csv"]) - 1 == s.valid_records
+
+
+def test_compute_summary_takes_only_booleans(spark, tmp_path):
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(tmp_path, CSV)
+    with pytest.raises(ValueError, match="compute_summary must be True or False"):
+        run_pipeline(spark, cfg, "employees", today="2026-08-13", compute_summary="observe")
 
 
 def test_stop_mode_on_custom_rule_raises(spark, tmp_path):
@@ -342,8 +371,10 @@ def test_no_duplicates_writes_no_duplicates_file(spark, tmp_path):
 
 
 def test_cli_writes_run_record(spark, tmp_path):
-    """The CLI's run.json carries the summary, the rows per sink and
-    the run's wall time and Spark version, as strict JSON."""
+    """The CLI's run.json carries the summary, the rows per sink, the
+    run's wall time and Spark version and the SHA-256 of the entity's
+    config as canonical JSON, as strict JSON."""
+    import hashlib
     import json
 
     import yaml
@@ -372,6 +403,8 @@ def test_cli_writes_run_record(spark, tmp_path):
     assert record["projection_counts"] == {"personal_data": 7, "contract_data": 7}
     assert record["spark_version"] == spark.version
     assert record["wall_s"] > 0
+    canonical = json.dumps(cfg["transformations_config"]["employees"], sort_keys=True)
+    assert record["config_sha256"] == hashlib.sha256(canonical.encode()).hexdigest()
 
 
 # Spark jobs of one counted run with export on this fixture: the CSV

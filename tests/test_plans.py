@@ -269,42 +269,6 @@ def test_hash_split_and_mixture_are_narrow(spark, sf_dir):
     )
 
 
-def test_observed_summary_matches_classic(spark, sf_dir):
-    """compute_summary='observe' computes the identical funnel from
-    ONE action (Observation metric nodes on the single lineage) as the
-    classic multi-action summary."""
-    from universal_importer_duckdb_spark import entry_queries as eq
-    from universal_importer_duckdb_spark.plans.pipeline import (
-        finalize_observed_summary,
-        run_pipeline,
-    )
-
-    li = eq._t(spark, sf_dir, "lineitem")
-    kw = dict(
-        source_df=li, today=eq.TODAY, order_cols=eq.LINEITEM_COLS,
-    )
-    classic = run_pipeline(
-        spark, eq.LINEITEM_ENTITY_CONFIG, "lineitem",
-        compute_summary=True, **kw,
-    ).summary
-    res = run_pipeline(
-        spark, eq.LINEITEM_ENTITY_CONFIG, "lineitem",
-        compute_summary="observe", **kw,
-    )
-    assert res.summary is None  # zero jobs so far
-    res.stage.write.format("noop").mode("overwrite").save()  # THE action
-    obs = finalize_observed_summary(res)
-    assert (
-        obs.total_records, obs.schema_errors, obs.duplicates_removed,
-        obs.custom_validation_errors, obs.valid_records,
-    ) == (
-        classic.total_records, classic.schema_errors,
-        classic.duplicates_removed, classic.custom_validation_errors,
-        classic.valid_records,
-    )
-    assert res.summary is obs
-
-
 @pytest.mark.parametrize(
     "name",
     [

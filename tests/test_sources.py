@@ -114,21 +114,6 @@ def test_binary_files_feed_multimodal_features(spark, tmp_path):
     assert {r.luma_sum for r in rows} == {12 * 3 * 9, 5 * 7 * 200}
 
 
-def test_ingest_order_by_columns_is_parallel_rank(spark):
-    from pyspark.sql import functions as F
-
-    from universal_importer_duckdb_spark.sources.readers import with_ingest_order
-
-    df = spark.range(0, 1000).select(
-        (F.col("id") * 37 % 1000).alias("k"), F.col("id").alias("payload")
-    ).repartition(8)
-    out = with_ingest_order(df, ["k"])
-    rows = out.orderBy("k").collect()
-    # dense 1-based ordinal == rank by the order columns
-    assert [r._ingest_ord for r in rows] == list(range(1, 1001))
-    assert [r.k for r in rows] == sorted(r.k for r in rows)
-
-
 def test_json_corrupt_capture(spark, tmp_path):
     from universal_importer_duckdb_spark.sources.readers import (
         read_json_with_corrupt_capture,

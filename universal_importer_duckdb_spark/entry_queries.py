@@ -589,6 +589,10 @@ def oracle_sql():
 #  changed code; the dedup and rule entries stay, because the window
 #  helper in operators/dedup.py and the rule builder in
 #  operators/rules.py changed. 12 + 38 = 50.
+#  Observe-funnel removal: pipeline_summary_observed_lineitem is
+#  deleted (its path is gone); rule_age_gte_skip_orders takes its slot,
+#  since it runs the execute_custom_validations skip branch that lost
+#  its Observation hook. 13 + 37 = 50.
 _R15_WINDOW = (
     # ---- changed in r16 and by the near-dup cleanup: certify ----
     "docs_simhash_neardup",
@@ -604,6 +608,8 @@ _R15_WINDOW = (
     "pipeline_summary_lineitem",
     "validate_customer_valid",
     "validate_customer_errors",
+    # ---- runs the rule operator the observe-funnel removal edited ----
+    "rule_age_gte_skip_orders",
     # ---- the committed r10-era displacements (staleness burn) ----
     "dedup_first_lineitem",
     "events_dedup_first_by_key",
@@ -637,7 +643,6 @@ _R15_WINDOW = (
     "multimodal_image_tiles",
     "orders_expectation_suite",
     "orders_snapshot_drift",
-    "pipeline_summary_observed_lineitem",
     "q2_min_cost_supplier",
     "q7_volume_shipping",
     "rule_age_gte_invalid_orders",
@@ -647,63 +652,8 @@ _R15_WINDOW = (
     "stream_split_leakage",
 )
 
-# r14 roster text kept for the audit trail:
-_R14_WINDOW = (
-    # ---- the committed 11 r9-era displacements (staleness burn) ----
-    "docs_minhash_lsh_neardup",
-    "docs_neardup_clusters",
-    "docs_chunk_for_training",
-    "emb_semdedup",
-    "emb_incremental_semdedup",
-    "stream_semdedup_ingest",
-    "stream_multisignal_admission",
-    "stream_simhash_neardup_dedup",
-    "multimodal_audio_features",
-    "stream_incremental_upsert_state",
-    "docs_stratified_sample",
-    # ---- changed in r14: re-verify ----
-    "q3_top_unshipped",
-    "q1_pricing_summary",
-    "q5_revenue_by_nation",
-    "q18_large_orders",
-    "docs_corpus_assembly_pipeline",
-    # ---- the r10-era staleness cohort (last checked r10) ----
-    "dedup_cascade_lineitem",
-    "docs_benchmark_contamination",
-    "docs_budget_selection",
-    "docs_containment_pairs",
-    "docs_cross_doc_ngram_dup",
-    "docs_curriculum_stages",
-    "docs_fingerprint_exact_dedup",
-    "docs_corpus_card",
-    "docs_hybrid_search_rrf",
-    "docs_ngram_topk_similar",
-    "docs_pack_sequences",
-    "docs_quality_scores",
-    "docs_shipped_tokenizer_counts",
-    "docs_source_token_divergence",
-    "docs_source_token_stats_udaf",
-    "docs_temperature_mixture",
-    "emb_ann_lsh_topk",
-    "emb_cosine_topk",
-    "emb_knn_join",
-    "emb_matryoshka_recall",
-    "events_merge_upsert_state",
-    "events_sessionization",
-    "events_user_narratives",
-    "lineitem_content_checksum",
-    "multimodal_video_features",
-    "orders_compaction_plan",
-    "pipeline_summary_lineitem",
-    "q9_profit_by_nation_year",
-    "rule_age_gte_skip_orders",
-    "stream_dedup_within_watermark",
-    "stream_enriched_segment_counts",
-    "stream_langid_scores",
-    "stream_lm_bits",
-    "stream_running_user_stats",
-)
-
+# Full r14 roster text: git show 4be5471:universal_importer_duckdb_
+# spark/entry_queries.py (the _R14_WINDOW tuple).
 # Full r13 roster text: git show f82252d~1:universal_importer_duckdb_
 # spark/entry_queries.py (the _R13_WINDOW tuple).
 # Full r12 roster text: git show d6b2293:universal_importer_duckdb_

@@ -119,7 +119,6 @@ def execute_custom_validations(
     rules: list[dict[str, Any]],
     mode: str = "skip",
     today: str | None = None,
-    observe_invalid: list | None = None,
 ) -> tuple[DataFrame, list[dict[str, Any]]]:
     """Apply configured rules; return ``(kept, issues)``.
 
@@ -127,12 +126,6 @@ def execute_custom_validations(
     invalid: DataFrame}. Unknown rule names are skipped with a notice
     (reference main.py:195 logs and continues). ``stop`` mode raises
     ValueError naming the first failing rule (reference main.py:186-187).
-
-    ``observe_invalid`` (a caller-owned list) opts into one-action
-    metrics in skip mode: each executed rule plants an Observation
-    (``n_invalid``) on the kept lineage just before its filter and
-    appends it to the list, so per-rule failure counts ride the next
-    downstream action instead of costing one count() per rule.
     """
     today = today or _dt.date.today().isoformat()
     kept = df
@@ -152,15 +145,6 @@ def execute_custom_validations(
             if n > 0:
                 raise ValueError(stop_message(rule, n))
         else:
-            if observe_invalid is not None:
-                from pyspark.sql import Observation
-
-                ob = Observation()
-                kept = kept.observe(
-                    ob,
-                    F.count_if(F.coalesce(fail, F.lit(False))).alias("n_invalid"),
-                )
-                observe_invalid.append(ob)
             kept = kept.filter(~F.coalesce(fail, F.lit(False)))
         issues.append({"field": field, "validation": name, "params": params,
                        "invalid": invalid, "skipped": False})

@@ -24,7 +24,6 @@ from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from universal_importer_duckdb_spark.config.schema_compiler import (
     CompiledSchema,
@@ -112,7 +111,6 @@ def validate_dataframe(
     schema: CompiledSchema,
     fillna: dict[str, Any] | None = None,
     ingest_ord: str | None = None,
-    observe_with=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split ``df`` into (valid, errors) under the compiled schema.
 
@@ -123,22 +121,10 @@ def validate_dataframe(
 
     The lineage is declared with one ``selectExpr`` per output over
     the schema's SQL-text constraints.
-
-    ``observe_with`` (a ``pyspark.sql.Observation``) plants a metrics
-    node on the flagged frame — ``total`` and ``schema_errors`` become
-    available from the observation after ANY downstream action
-    touches the lineage, costing zero extra passes (the one-action
-    funnel; see plans/pipeline.py compute_summary="observe").
     """
     keep = [ingest_ord] if ingest_ord and ingest_ord in df.columns else []
     base = declared_frame(df, schema, fillna, keep)
     flagged = base.selectExpr("*", f"{flag_sql(schema)} AS {FLAG_COL}")
-    if observe_with is not None:
-        flagged = flagged.observe(
-            observe_with,
-            F.expr("count(1)").alias("total"),
-            F.expr(f"count_if({FLAG_COL})").alias("schema_errors"),
-        )
     valid = flagged.filter(f"NOT {FLAG_COL}").selectExpr(
         *typed_columns_sql(schema), *[quote_ident(k) for k in keep]
     )

@@ -13,9 +13,9 @@ cached once; a single ``groupBy("_sink", <partition>)`` aggregate
 fills the cache and returns every summary number (plus the
 per-partition sizes that turn the read-time row id into the dense
 1-based error ``row``), and each output — the stage, the projections,
-each error file — is a filter of the cache. The lazy runs
-(``compute_summary=False`` / ``"observe"``) keep the stage-by-stage
-operator chain, where each stage returns ``(kept, rejected)``.
+each error file — is a filter of the cache. The lazy run
+(``compute_summary=False``) keeps the stage-by-stage operator chain,
+where each stage returns ``(kept, rejected)``, and counts nothing.
 
 Scale notes: validation is a narrow map (no shuffle); the only
 shuffles are one per dedup composite key. Projections run through
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as _dt
+import hashlib
 import json
 import os
 import time
@@ -65,7 +66,6 @@ from universal_importer_duckdb_spark.operators.validate import (
 from universal_importer_duckdb_spark.sources.readers import (
     INGEST_ORD,
     read_csv_with_ingest_order,
-    with_ingest_order,
 )
 from universal_importer_duckdb_spark.sources.writers import export_csv, save_errors
 
@@ -73,8 +73,9 @@ SINK = "_sink"
 KEPT = "kept"
 SCHEMA_SINK = "schema_validation"
 DUP_SINK = "duplicates"
-# read-time row id of the routed run: monotonically_increasing_id, i.e.
-# (partition index << 33) + row index within the partition
+# read-time row id of a frame without an ingest order:
+# monotonically_increasing_id, i.e. (partition index << 33) + row index
+# within the partition
 _MID = "__mid"
 _MSG = "__msg"
 
@@ -88,10 +89,6 @@ class PipelineResult:
     custom_issues: list[dict[str, Any]] = field(default_factory=list)
     projections: dict[str, DataFrame] = field(default_factory=dict)
     summary: RunSummary | None = None
-    # observe mode: Observation handles planted on the stage lineage
-    # (validate / post-dedup / per-rule); harvested lazily by
-    # finalize_observed_summary after ONE action touches the stage
-    observations: dict[str, Any] = field(default_factory=dict)
     # counted run: rows per _sink, from the routing aggregate
     sink_counts: dict[str, int] = field(default_factory=dict)
 
@@ -126,9 +123,10 @@ def run_pipeline(
 
     ``source_df`` overrides the config ``source`` CSV. Its
     ``_ingest_ord`` column, if any, is the ingest order and the error
-    ``row``; without one, file order is stamped at read time.
-    ``order_cols`` orders dedup by those columns instead (error
-    ``row`` is then NULL).
+    ``row``; without one, its partition order is stamped with
+    ``monotonically_increasing_id()`` (the lazy run then leaves the
+    error ``row`` NULL). ``order_cols`` orders dedup by those columns
+    instead (error ``row`` is then NULL).
 
     ``compute_summary=True`` routes every row once (module docstring):
     one cached frame, one aggregate for the whole summary, then one
@@ -140,17 +138,11 @@ def run_pipeline(
     cache, leaving ``result.summary`` None — the whole run then
     declares ONE lineage with zero Spark jobs, for callers that only
     consume ``result.stage``/``result.projections`` (the stop gate
-    still runs its one count when mode is 'stop').
-
-    ``compute_summary="observe"`` builds the same zero-job single
-    lineage but plants ``Observation`` metric nodes at every funnel
-    boundary (validate, post-dedup, each skip-mode rule). The FIRST
-    action that consumes ``result.stage`` — an export, a count, a
-    downstream aggregation — computes every funnel number as a side
-    effect of its one pass; call :func:`finalize_observed_summary`
-    afterwards to materialize ``result.summary``. (Projection counts
-    are not observed: projections are independent fan-out queries.)
+    still runs its one count when mode is 'stop'). Any other value
+    raises ``ValueError``.
     """
+    if not isinstance(compute_summary, bool):
+        raise ValueError(f"compute_summary must be True or False, not {compute_summary!r}")
     details = validate_config(config, entity)
     settings = details.get("settings", {})
     validations = details.get("validations", {})
@@ -167,12 +159,8 @@ def run_pipeline(
         projections=details.get("projections", []),
     )
     today = today or _dt.date.today().isoformat()
-    if compute_summary is True:
-        return _run_routed(spark, spec, source_df, today, output_dir, fillna, order_cols)
-    return _run_lazy(
-        spark, spec, source_df, today, output_dir, fillna, order_cols,
-        observe=compute_summary == "observe",
-    )
+    run = _run_routed if compute_summary else _run_lazy
+    return run(spark, spec, source_df, today, output_dir, fillna, order_cols)
 
 
 def _check_order_cols(spec: _Spec, order_cols: list[str] | None, columns: list[str]) -> None:
@@ -365,20 +353,13 @@ def _run_lazy(
     output_dir: str | None,
     fillna: dict[str, Any] | None,
     order_cols: list[str] | None,
-    observe: bool,
 ) -> PipelineResult:
     if source_df is None:
         source_df = read_csv_with_ingest_order(spark, spec.source)
     result = PipelineResult(entity=spec.entity)
 
     ingest = INGEST_ORD if INGEST_ORD in source_df.columns else None
-    obs_val = None
-    if observe:
-        obs_val = Observation()
-        result.observations["validate"] = obs_val
-    valid, errors = validate_dataframe(
-        source_df, spec.schema, fillna=fillna, ingest_ord=ingest, observe_with=obs_val
-    )
+    valid, errors = validate_dataframe(source_df, spec.schema, fillna=fillna, ingest_ord=ingest)
     result.schema_errors = errors
 
     # Stop gate: the reference reuses custom_validation_mode for this
@@ -390,32 +371,23 @@ def _run_lazy(
                 f"Schema validation failed for {n_schema_errors} rows in '{spec.entity}'"
             )
 
-    order: list[str] = order_cols or [ingest or INGEST_ORD]
+    order: list[str] = order_cols or [ingest or _MID]
     if spec.keys:
         _check_order_cols(spec, order_cols, valid.columns)
-        if not order_cols and not ingest:
-            # caller-supplied source_df without _ingest_ord and no
-            # order_cols: derive an ingest order (JVM-side stamp) so
-            # dedup ALWAYS runs when configured, as in the reference
-            valid = with_ingest_order(valid)
+        if order == [_MID]:
+            # caller frame without an order: file order, stamped
+            # JVM-side as in the routed run, so dedup ALWAYS runs when
+            # configured, as in the reference (error rows stay NULL)
+            valid = valid.selectExpr("*", f"monotonically_increasing_id() AS {_MID}")
         kept, dups = dedupe_cascade(valid, spec.keys, spec.resolution, order)
-        if observe:
-            obs_kept = Observation()
-            kept = kept.observe(obs_kept, F.count(F.lit(1)).alias("kept"))
-            result.observations["dedup_kept"] = obs_kept
     else:
         kept, dups = valid, valid.limit(0)
     result.duplicates = dups
 
-    rule_obs: list | None = [] if (observe and spec.mode == "skip") else None
-    kept, issues = execute_custom_validations(
-        kept, spec.rules, mode=spec.mode, today=today, observe_invalid=rule_obs
-    )
-    if rule_obs is not None:
-        result.observations["rules"] = rule_obs
+    kept, issues = execute_custom_validations(kept, spec.rules, mode=spec.mode, today=today)
     result.custom_issues = issues
 
-    stage = kept.drop(INGEST_ORD) if INGEST_ORD in kept.columns else kept
+    stage = kept.drop(INGEST_ORD, _MID)
     result.stage = stage
     stage.createOrReplaceTempView(f"{spec.entity}_stage")
     result.projections = create_projections(
@@ -423,52 +395,16 @@ def _run_lazy(
     )
 
     if output_dir:
-        def _clean(edf: DataFrame) -> DataFrame:
-            return edf.drop(INGEST_ORD) if INGEST_ORD in edf.columns else edf
-
         export_csv(result.projections, output_dir)
         save_errors(spec.entity, SCHEMA_SINK, errors, output_dir)
-        save_errors(spec.entity, DUP_SINK, _clean(dups), output_dir)
+        save_errors(spec.entity, DUP_SINK, dups.drop(INGEST_ORD, _MID), output_dir)
         for issue in issues:
             if issue.get("invalid") is not None:
                 save_errors(
-                    spec.entity, f"custom_{issue['field']}", _clean(issue["invalid"]), output_dir
+                    spec.entity, f"custom_{issue['field']}",
+                    issue["invalid"].drop(INGEST_ORD, _MID), output_dir,
                 )
     return result
-
-
-def finalize_observed_summary(result: PipelineResult) -> RunSummary:
-    """Materialize the funnel summary from a ``compute_summary=
-    "observe"`` run. Call AFTER one action has consumed
-    ``result.stage`` (or any frame derived from it) — ``Observation.
-    get`` blocks until its metrics node has been executed, so calling
-    this with no action yet issued will hang rather than guess.
-
-    Every number is a byproduct of that single pass: total/schema
-    errors from the validate node, duplicates from the post-dedup
-    node, per-rule failures from the pre-filter rule nodes. Projection
-    counts are NOT filled (independent fan-out queries — count them
-    where they are exported)."""
-    obs = result.observations
-    if "validate" not in obs:
-        raise ValueError("run_pipeline was not invoked with compute_summary='observe'")
-    summary = RunSummary(entity=result.entity)
-    v = obs["validate"].get
-    summary.total_records = v["total"]
-    summary.schema_errors = v["schema_errors"]
-    valid_records = summary.total_records - summary.schema_errors
-    if "dedup_kept" in obs:
-        summary.duplicates_removed = valid_records - obs["dedup_kept"].get["kept"]
-    else:
-        summary.duplicates_removed = 0
-    summary.custom_validation_errors = sum(
-        ob.get["n_invalid"] for ob in obs.get("rules", [])
-    )
-    summary.valid_records = (
-        valid_records - summary.duplicates_removed - summary.custom_validation_errors
-    )
-    result.summary = summary
-    return summary
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -478,7 +414,9 @@ def main(argv: list[str] | None = None) -> int:
 
     Besides the exports and error files it writes
     ``<output_dir>/run.json`` (strict JSON): the summary fields, rows
-    per sink from the routing aggregate, wall time and Spark version."""
+    per sink from the routing aggregate, wall time, Spark version and
+    ``config_sha256``, the SHA-256 of the entity's config as canonical
+    JSON (sorted keys; YAML dates as ISO strings)."""
     from universal_importer_duckdb_spark.session import get_spark
 
     parser = argparse.ArgumentParser(description="Run the import pipeline for an entity")
@@ -509,6 +447,11 @@ def main(argv: list[str] | None = None) -> int:
         "sink_counts": result.sink_counts,
         "wall_s": round(wall_s, 3),
         "spark_version": spark.version,
+        "config_sha256": hashlib.sha256(
+            json.dumps(
+                config["transformations_config"][args.entity], sort_keys=True, default=str
+            ).encode()
+        ).hexdigest(),
     }
     os.makedirs(args.output_dir, exist_ok=True)
     with open(os.path.join(args.output_dir, "run.json"), "w") as f:

@@ -833,42 +833,6 @@ def pipeline_summary_lineitem(spark, sf_dir):
     )
 
 
-def pipeline_summary_observed_lineitem(spark, sf_dir):
-    """The same funnel as pipeline_summary_lineitem, computed by the
-    ONE-ACTION observe path: Observation metric nodes planted at each
-    stage boundary (plans/pipeline.py compute_summary="observe"), all
-    harvested from a single noop-sink pass over the stage lineage —
-    zero extra scans, the way a 100 TB run reports its funnel. Same
-    oracle as the classic multi-action form, certifying the two
-    summary paths agree with the declarative SQL definition."""
-    from universal_importer_duckdb_spark.plans.pipeline import (
-        finalize_observed_summary,
-        run_pipeline,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    res = run_pipeline(
-        spark, LINEITEM_ENTITY_CONFIG, "lineitem", source_df=li,
-        today=TODAY, order_cols=LINEITEM_COLS,
-        compute_summary="observe",
-    )
-    res.stage.write.format("noop").mode("overwrite").save()
-    s = finalize_observed_summary(res)
-    return spark.createDataFrame(
-        [
-            (
-                s.total_records,
-                s.schema_errors,
-                s.duplicates_removed,
-                s.custom_validation_errors,
-                s.valid_records,
-            )
-        ],
-        "total_records bigint, schema_errors bigint, duplicates_removed bigint, "
-        "custom_errors bigint, final_records bigint",
-    )
-
-
 PIPELINE_SUMMARY_SQL = f"""
 WITH src AS (SELECT * FROM lineitem),
 valid AS (SELECT * FROM src WHERE {PIPELINE_VALID_COND}),
@@ -1204,11 +1168,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "projection_alias_orders": (projection_alias_orders, PROJECTION_SQL),
     "pipeline_flagship": (pipeline_flagship, PIPELINE_FLAGSHIP_SQL),
     "pipeline_summary_lineitem": (pipeline_summary_lineitem, PIPELINE_SUMMARY_SQL),
-    # one-action observe variant; shares the in-window classic oracle,
-    # so it rides outside the 50-slot window until the r6 rotation
-    "pipeline_summary_observed_lineitem": (
-        pipeline_summary_observed_lineitem, PIPELINE_SUMMARY_SQL,
-    ),
     "events_tumbling_hourly": (events_tumbling_hourly, TUMBLING_SQL),
     "events_sessionization": (events_sessionization, SESSION_SQL),
     "events_json_extract": (events_json_extract, JSON_SQL),

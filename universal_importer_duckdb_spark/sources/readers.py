@@ -6,26 +6,17 @@ ROWID — main.py:135); ``_ingest_ord`` is stamped once at read time and
 carried through the pipeline for first/last dedup and 1-based error
 ``row`` numbers (SURVEY.md §7.3).
 
-Two recipes:
-- ``with_ingest_order(df, order_cols)`` — the data has a total order
-  (keys, timestamps): range-partition on those columns, sort within
-  partitions, stamp with per-partition offsets. Parallel at every
-  step — a plain ``row_number() OVER (ORDER BY ...)`` would funnel
-  the whole table through ONE task. (Prefer skipping the ordinal
-  entirely where possible: dedup and rules accept ``order_cols``
-  directly, see plans/pipeline.py.)
-- ``with_ingest_order(df)`` (no columns) — file order, stamped
-  entirely JVM-side: ``spark_partition_id`` + the per-partition-
-  consecutive counter inside ``monotonically_increasing_id``, plus a
-  broadcast join against cumulative per-partition offsets (one small
-  count job over #partitions rows). No ``df.rdd``, no Python pickle
-  round-trip of the data — the whole stamp stays in whole-stage
-  codegen.
+The stamp is file order, computed entirely JVM-side:
+``spark_partition_id`` + the per-partition-consecutive counter inside
+``monotonically_increasing_id``, plus a broadcast join against
+cumulative per-partition offsets (one small count job over
+#partitions rows). No ``df.rdd``, no Python pickle round-trip of the
+data — the whole stamp stays in whole-stage codegen. (The pipeline's
+counted run needs no stamp at all: it takes the offsets from its one
+routing aggregate, see plans/pipeline.py.)
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,17 +24,8 @@ from pyspark.sql import functions as F
 INGEST_ORD = "_ingest_ord"
 
 
-def with_ingest_order(df: DataFrame, order_cols: Sequence[str] | None = None) -> DataFrame:
-    if order_cols:
-        # Dense 1-based ordinal consistent with ORDER BY order_cols —
-        # computed in parallel: range-partitioning puts globally-ordered
-        # key ranges in partition order, the local sort orders within,
-        # and per-partition offsets complete the global ordinal (one
-        # extra metadata-sized count job, no single-partition window
-        # sort).
-        df = df.repartitionByRange(*[F.col(c) for c in order_cols]).sortWithinPartitions(
-            *[F.col(c) for c in order_cols]
-        )
+def with_ingest_order(df: DataFrame) -> DataFrame:
+    """Add ``_ingest_ord``: the dense 1-based file-order ordinal."""
     # monotonically_increasing_id = (partition_id << 33) + consecutive
     # row counter, so (mid - min(mid) per partition) is the local row
     # index — computed without any window over the data.
@@ -52,16 +34,6 @@ def with_ingest_order(df: DataFrame, order_cols: Sequence[str] | None = None) ->
         F.spark_partition_id().alias("__ord_pid"),
         F.monotonically_increasing_id().alias("__ord_mid"),
     )
-    if order_cols:
-        # The range exchange re-samples boundaries per job; pin one
-        # materialization so the offsets pass and the stamping join
-        # see identical partition contents. Eager localCheckpoint, not
-        # persist(): persist registers in the CacheManager and (absent
-        # an unpersist no caller can safely time against this lazy
-        # lineage) pins storage for the session — repeated pipeline
-        # runs then accumulate until eviction churn. Checkpoint blocks
-        # are reference-tracked and freed on GC.
-        stamped = stamped.localCheckpoint(eager=True)
     stats = stamped.groupBy("__ord_pid").agg(
         F.count(F.lit(1)).alias("__ord_n"),
         F.min("__ord_mid").alias("__ord_base"),
@@ -86,15 +58,11 @@ def with_ingest_order(df: DataFrame, order_cols: Sequence[str] | None = None) ->
     )
 
 
-def read_csv_with_ingest_order(
-    spark: SparkSession,
-    path: str,
-    order_cols: Sequence[str] | None = None,
-) -> DataFrame:
+def read_csv_with_ingest_order(spark: SparkSession, path: str) -> DataFrame:
     """Header CSV read as all-strings (validation casts later, so we
     keep raw values for faithful error records), then ordinal-stamped."""
     df = spark.read.option("header", True).option("inferSchema", False).csv(path)
-    return with_ingest_order(df, order_cols)
+    return with_ingest_order(df)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -151,21 +151,24 @@ BENCH_QUERIES = [
 # table), and events_heavy_hitters_cms (the <=depth*width-cell
 # sketch collects into a literal map below the size gate); since r11
 # also the incremental-admission pair docs_incremental_selfdup_spans
-# / docs_ingest_novelty (the at-rest gram index is an eager
-# localCheckpoint — corpus.py::gram_index(held=True) — closing the
-# r10 verdict's like-for-like gap: the benched shape now IS the
-# production serving shape instead of rebuilding the index per run)):
-# their builders run bounded training actions at
-# plan-construction time, and the prepared-plan cache (plancache.py)
-# reuses the trained artifact across the N timed runs — so the
-# reported number is the RE-QUERY cost against the held artifact
-# (the long-lived-session serving shape), not train-from-scratch.
-# First-run build costs at sf0.1, for the record: bpe_learn ~1.3 s,
-# textrank ~2.5 s (5 integer PageRank iterations incl. graph
+# / docs_ingest_novelty (the at-rest gram index is held —
+# corpus.py::gram_index — closing the r10 verdict's like-for-like
+# gap: the benched shape now IS the production serving shape instead
+# of rebuilding the index per run)): their builders either run
+# bounded training actions at plan-construction time or hold the
+# artifact through caching.scoped_cache, which the FIRST timed run
+# builds; the prepared-plan cache (plancache.py) reuses the plan and
+# so the held artifact across the N timed runs — so the min/median
+# is the RE-QUERY cost against the held artifact (the
+# long-lived-session serving shape), not train-from-scratch, and the
+# first timed run carries the scoped-cache builds. Each entry starts
+# from release_scoped + clearCache, so no artifact outlives its
+# entry. First-run build costs at sf0.1, for the record: bpe_learn
+# ~1.3 s, textrank ~2.5 s (5 integer PageRank iterations incl. graph
 # construction), dsir artifact ~0.5 s, collocation counts ~0.4 s,
-# at-rest gram index ~0.7-0.9 s (incl. plan construction; measured
-# r11 — the held re-query then runs ~0.24 s vs 0.712/0.60 s for the
-# per-run-rebuild shape it replaces).
+# at-rest gram index ~0.7-0.9 s (measured r11 — the held re-query
+# then runs ~0.24 s vs 0.712/0.60 s for the per-run-rebuild shape it
+# replaces).
 
 
 def time_oracles(

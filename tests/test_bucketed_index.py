@@ -113,9 +113,9 @@ def test_bucketed_gram_index_probe_plan(spark, sf_dir):
         n = hits.count()
         plan = hits._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0]  # final plan only
-        # the PROBE OPERATOR over the stored index equals the inline
-        # form — one definition, three storage shapes (inline, held
-        # checkpoint, bucketed table)
+        # the PROBE OPERATOR over the stored index equals the held
+        # form — one definition, two storage shapes (held in the
+        # session cache, bucketed table)
         via_table = sorted(map(tuple, incremental_duplicate_spans(
             at_rest, arriving, n=8, index=stored).collect()))
         inline = sorted(map(tuple, incremental_duplicate_spans(

@@ -159,6 +159,108 @@ def test_scoped_cache_release(spark):
     assert release_scoped(spark) == 0
 
 
+def test_release_scoped_frees_held_artifacts(spark):
+    """The semantic-admission artifacts are held through scoped_cache:
+    after one noop write, release_scoped frees every cached RDD the
+    run built, and the same frame still answers with the identical
+    row multiset, recomputed from its plan."""
+    from collections import Counter
+
+    from universal_importer_duckdb_spark.caching import release_scoped
+    from universal_importer_duckdb_spark.operators.semdedup import (
+        at_rest_artifacts,
+        incremental_semdedup,
+    )
+
+    def cached_rdds():
+        return {
+            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    release_scoped(spark)
+    spark.catalog.clearCache()
+    before = cached_rdds()  # lineage cuts other tests left, if any
+    dim = 64
+    rest = spark.createDataFrame(
+        [(i, [float(i % 7) / 7.0] * dim) for i in range(1, 31)],
+        "vec_id bigint, embedding array<double>",
+    )
+    arr = spark.createDataFrame(
+        [(100 + i, [float(i % 5) / 5.0] * dim) for i in range(6)],
+        "vec_id bigint, embedding array<double>",
+    )
+    _, kept_q = at_rest_artifacts(rest, n_clusters=2, sample_size=30, iters=2)
+    assert kept_q.storageLevel.useMemory  # held, not a lazy plan
+    df = incremental_semdedup(
+        rest, arr, n_clusters=2, sample_size=30, iters=2
+    )
+    df.write.format("noop").mode("overwrite").save()
+    assert cached_rdds() - before  # the write built the held frame
+    expected = Counter(map(tuple, df.collect()))
+    assert sum(expected.values()) == 6
+
+    assert release_scoped(spark) >= 1
+    assert cached_rdds() == before
+    spark.catalog.clearCache()
+    assert Counter(map(tuple, df.collect())) == expected
+    assert cached_rdds() == before  # recomputed, not re-held
+
+
+def test_lineage_cuts_only_where_the_loop_needs_them():
+    """One way to hold a frame for reuse: scoped_cache. A bare
+    ``localCheckpoint`` (no release path, no lineage) is allowed only
+    where cutting the lineage is the point — the rank loop and graph
+    of textrank_keywords, the per-round barrier of neardup_clusters,
+    learn_bpe's word table, the streaming upsert state, and the XML
+    parse, whose handles must outlive release_scoped — plus the
+    artifacts measured slower when cached (top_collocations, the DSIR
+    and bigram-LM tables). No artifact builder takes a ``held``
+    flag."""
+    import ast
+    import inspect
+    import pathlib
+    from collections import Counter
+
+    import universal_importer_duckdb_spark as pkg
+    from universal_importer_duckdb_spark.operators.admission import (
+        multisignal_admission,
+    )
+    from universal_importer_duckdb_spark.operators.corpus import gram_index
+    from universal_importer_duckdb_spark.operators.semdedup import (
+        at_rest_artifacts,
+        incremental_semdedup,
+    )
+
+    allowed = Counter({
+        ("operators/textrank.py", "textrank_keywords"): 3,
+        # artifacts measured slower when cached (comment at each site)
+        ("operators/textrank.py", "top_collocations"): 1,
+        ("operators/dsir.py", "dsir_contribution_artifact"): 2,
+        ("operators/lm.py", "bigram_lm_artifact"): 1,
+        ("operators/dedup_text.py", "neardup_clusters"): 1,
+        ("operators/bpe.py", "learn_bpe"): 1,
+        ("streaming/upsert.py", "incremental_state"): 1,
+        ("sources/readers.py", "read_xml_with_corrupt_capture"): 1,
+    })
+    root = pathlib.Path(pkg.__file__).parent
+    found = Counter()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    found[(rel, getattr(top, "name", "<module>"))] += 1
+    assert found == allowed
+    for fn in (gram_index, at_rest_artifacts, incremental_semdedup,
+               multisignal_admission):
+        assert "held" not in inspect.signature(fn).parameters, fn.__name__
+
+
 def test_repetition_signals_flags_spam_not_short(spark):
     from universal_importer_duckdb_spark.operators.text_analysis import (
         repetition_signals,

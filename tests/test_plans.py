@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -18,6 +19,36 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def serving_plan(plan: str) -> str:
+    """``plan`` without the subtree of any ``InMemoryRelation`` — the
+    build plan of a held (scoped-cached) artifact, which formatted,
+    executed and optimized plan strings all print inline under the
+    scan that reads it. What is left is the plan that serves from the
+    artifact; the ``InMemoryTableScan`` that reads it stays. Formatted
+    plans also lose the numbered detail sections of the dropped
+    nodes."""
+    kept, dropped, cut = [], set(), None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-|"))
+        if cut is not None and line.strip() and col > cut:
+            dropped.update(re.findall(r"\((\d+)\)$", line))
+            continue
+        cut = None
+        if "InMemoryRelation" in line and not line.startswith("("):
+            cut = col
+            dropped.update(re.findall(r"\((\d+)\)$", line))
+            continue
+        kept.append(line)
+    out, skip = [], False
+    for line in kept:
+        m = re.match(r"\((\d+)\) ", line)
+        if m:
+            skip = m.group(1) in dropped
+        if not skip:
+            out.append(line)
+    return "\n".join(out)
 
 
 def test_q1_pushes_filter_and_prunes_columns(spark, sf_dir):
@@ -310,22 +341,25 @@ def test_bloom_probe_broadcasts_bitmap(spark, sf_dir):
 def test_admission_funnel_plan_shape(spark, sf_dir):
     """The three-gate funnel (r8): no cartesian anywhere; the quality
     gate stays a JVM literal-map fold; scans prune to the columns each
-    gate needs. The entry runs with ``held=True``, so the at-rest side
-    — the at-rest centroid assignment (a MapInPandas) and the
-    per-cluster semdedup prune (a FlatMapGroupsInPandas) — is built
-    once by an eager localCheckpoint and the plan reads it back as a
-    ``Scan ExistingRDD``. What stays in the plan is the arriving
-    batch's centroid assignment and the cogrouped admission kernel."""
-    plan = _plan(
+    gate needs. The at-rest side — the at-rest centroid assignment (a
+    MapInPandas) and the per-cluster semdedup prune (a
+    FlatMapGroupsInPandas) — is the held kept-member frame: a
+    scoped-cached relation whose build plan sits under its
+    ``InMemoryRelation``. The serving plan (that subtree dropped)
+    keeps the arriving batch's centroid assignment and the cogrouped
+    admission kernel."""
+    full = _plan(
         eq.REGISTRY["docs_multisignal_admission"][0](spark, sf_dir)
     )
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in full
+    assert "InMemoryRelation" in full  # the held kept-member frame
+    plan = serving_plan(full)
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     # formatted explain prints each node twice (tree + detail)
     assert plan.count("MapInPandas") == 2  # arriving assign only
     assert plan.count("FlatMapGroupsInPandas") == 0  # prune is held
     assert plan.count("FlatMapCoGroupsInPandas") == 2  # admission kernel
-    assert "Scan ExistingRDD" in plan  # the held kept-member frame
+    assert "InMemoryTableScan" in plan  # reads the held frame
     # documents scans read only (doc_id, text); the quantize-side
     # embeddings scan must not read the unused label column
     for line in plan.splitlines():
@@ -439,10 +473,11 @@ def test_langid_scoring_is_shuffle_free(spark, sf_dir):
     the argmin window both reuse its doc_id partitioning (subset
     clustering), and the argmin lowers to WindowGroupLimit."""
     df = eq.REGISTRY["docs_langid_trigram_rank"][0](spark, sf_dir)
-    df.count()  # materialize the profile checkpoint: plan = scoring only
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
+    df.count()  # build the held profile
+    full = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" in full  # the held profile
+    plan = serving_plan(full)  # scoring only
+    assert "InMemoryTableScan" in plan
     hash_exchanges = re.findall(r"Exchange hashpartitioning[^\n]*", plan)
     assert len(hash_exchanges) == 1, hash_exchanges
     assert "REPARTITION" in hash_exchanges[0]

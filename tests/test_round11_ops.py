@@ -25,7 +25,7 @@ def _corpus(spark):
 
 
 def test_held_gram_index_equals_inline_spans(spark):
-    """incremental_duplicate_spans served from gram_index(held=True)
+    """incremental_duplicate_spans served from a built gram_index
     is row-identical to the inline derive-from-at-rest form — the
     held artifact changes WHEN the index is computed, never what any
     verdict says (the batch-order-free incremental contract)."""
@@ -45,7 +45,7 @@ def test_held_gram_index_equals_inline_spans(spark):
                 at_rest,
                 arriving,
                 n=8,
-                index=gram_index(at_rest, n=8, held=True),
+                index=gram_index(at_rest, n=8),
             ).collect(),
         )
     )
@@ -61,7 +61,7 @@ def test_held_gram_index_equals_inline_novelty(spark):
     )
 
     at_rest, arriving = _corpus(spark)
-    idx = gram_index(at_rest, n=8, held=True)
+    idx = gram_index(at_rest, n=8)
     inline = sorted(map(tuple, ingest_novelty(at_rest, arriving, n=8).collect()))
     held = sorted(
         map(tuple, ingest_novelty(at_rest, arriving, n=8, index=idx).collect())
@@ -81,29 +81,32 @@ def test_gram_index_is_distinct_and_bounded(spark):
         [(i, seen) for i in range(50)],  # one hot gram, 50 holders
         "doc_id bigint, text string",
     )
-    idx = gram_index(at_rest, n=8, held=True)
+    idx = gram_index(at_rest, n=8)
     assert idx.count() == 1
     assert idx.columns == ["gram"]
 
 
 def test_held_index_registry_entries_share_one_artifact_shape(spark, sf_dir):
     """Both registry entries build the SAME held-index artifact from
-    the same at-rest split, and their plans read a materialized scan
-    (no parquet re-derivation of the index inside the probed plan):
-    exactly one parquet scan remains — the arriving side's."""
+    the same at-rest split, and their serving plans read it through
+    an in-memory scan (no parquet re-derivation of the index outside
+    the held relation's own build plan): exactly one parquet scan
+    remains — the arriving side's."""
     import re
+
+    from test_plans import serving_plan
 
     from universal_importer_duckdb_spark import entry_queries as eq
 
     # parquet scans remaining = the ARRIVING side only: 1 for the
     # spans probe; 2 for novelty (probe + the arriving-ids left join
     # that restores the (0,0) short-doc rows). The index side is the
-    # checkpointed RDD scan in both.
+    # scoped-cached relation's scan in both.
     for name, n_scans in (
         ("docs_incremental_selfdup_spans", 1),
         ("docs_ingest_novelty", 2),
     ):
-        plan = (
+        full = (
             eq.REGISTRY[name][0](spark, sf_dir)
             ._jdf.queryExecution()
             .explainString(
@@ -112,9 +115,11 @@ def test_held_index_registry_entries_share_one_artifact_shape(spark, sf_dir):
                 )
             )
         )
+        assert "InMemoryRelation" in full, name
+        plan = serving_plan(full)
         scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.MULTILINE)
         assert len(scans) == n_scans, (name, plan)
-        assert "Scan ExistingRDD" in plan, name
+        assert "InMemoryTableScan" in plan, name
 
 
 # ---------------------------------------------------------------

@@ -11,7 +11,10 @@ Usage:
 
 Run from any checkout: the plan is built against $SPARK_GRAFT_SF_DIR
 (default sf0.1, the bench SF, so broadcast-threshold decisions in the
-printed initial plan match what the bench executes). Note the printed
+printed initial plan match what the bench executes). The capture names
+the data directory by its basename only, in the header and in every
+scan's ``Location`` line, so captures of the same plan from two
+checkouts or hosts compare equal. Note the printed
 plan is the AQE *initial* plan (isFinalPlan=false); runtime
 re-optimizations (coalescing, SMJ->BHJ flips) are narrated in the
 docstrings/OPTIMIZATION notes where they matter.
@@ -22,10 +25,24 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def portable(text: str, sf_dir: str) -> str:
+    """``text`` with the absolute data directory ``sf_dir`` replaced by
+    its basename wherever it names a path (followed by ``/``, ``]``,
+    whitespace or the end)."""
+    root = os.path.abspath(sf_dir).rstrip("/")
+    return re.sub(
+        re.escape(root) + r"(?=[/\]\s]|$)",
+        os.path.basename(root),
+        text,
+        flags=re.MULTILINE,
+    )
 
 
 def main() -> int:
@@ -53,9 +70,9 @@ def main() -> int:
             with redirect_stdout(buf):
                 df.explain("formatted")
             path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
+            header = f"== {name} ({args.suffix}) sf_dir={args.sf_dir} ==\n"
             with open(path, "w") as fh:
-                fh.write(f"== {name} ({args.suffix}) sf_dir={args.sf_dir} ==\n")
-                fh.write(buf.getvalue())
+                fh.write(portable(header + buf.getvalue(), args.sf_dir))
             print(f"wrote {path}")
         except Exception as exc:  # keep going; name the failure
             print(f"FAILED {name}: {exc}", file=sys.stderr)

@@ -1,4 +1,20 @@
-"""Scoped caching for query-builder fan-out frames.
+"""Scoped caching: the one way to hold a frame for reuse.
+
+The policy has two cases:
+
+* **Hold for reuse** (a fan-out frame a plan reads several times, or
+  a trained artifact — gram index, kept members, langid profile —
+  that later actions serve from) means ``scoped_cache``. The frame
+  keeps its plan, so ``release_scoped`` frees it and any later
+  action (or a lost cached block) recomputes the same rows from that
+  plan; every held artifact is deterministic.
+* **Cut the lineage inside a loop** (iterative rank/cluster rounds,
+  streaming state, a parse whose handles must outlive a release)
+  means ``localCheckpoint``, at the few sites where the cut is the
+  point. Three vocab-bounded artifacts (the collocation counts, the
+  DSIR tables, the bigram-LM table) are also checkpointed, because
+  their warm re-query measured slower when cached; the numbers are
+  at each site.
 
 Query builders (entry_queries, operators) cache frames their plans
 reference several times. Plain ``df.cache()`` has exactly the right

@@ -56,16 +56,15 @@ def multisignal_admission(
     weights: dict[str, int],
     n_clusters: int = 16,
     eps2: int = EPS2_DEFAULT,
-    held: bool = False,
 ) -> DataFrame:
     """Admission verdicts for ``doc_batch`` against the at-rest corpus
     (``doc_index`` + ``emb_at_rest``). Returns one row per batch
     document: ``(doc_id, exact_dup, n_words, is_quality,
     has_embedding, nn_d2, sem_dup, admitted)`` — every gate's raw
     verdict is emitted (not just the conjunction) so the driver hash
-    pins each signal independently. ``held=True`` materializes the
-    semantic gate's at-rest artifacts once at plan construction
-    (operators/semdedup.py::at_rest_artifacts — the serving shape).
+    pins each signal independently. The semantic gate's at-rest
+    artifacts are held (operators/semdedup.py::at_rest_artifacts —
+    the serving shape).
     """
     from universal_importer_duckdb_spark.operators.quality_model import (
         quality_model_scores,
@@ -112,8 +111,7 @@ def multisignal_admission(
     )
 
     sem = incremental_semdedup(
-        emb_at_rest, emb_arriving, n_clusters=n_clusters, eps2=eps2,
-        held=held,
+        emb_at_rest, emb_arriving, n_clusters=n_clusters, eps2=eps2
     ).select(
         F.col("vec_id").alias("doc_id"),
         F.col("nn_d2").alias("__nn"),

@@ -887,7 +887,6 @@ def gram_index(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    held: bool = False,
 ) -> DataFrame:
     """The at-rest corpus's STORED distinct gram index — the single
     artifact the whole incremental admission family reads: 8 bytes
@@ -900,20 +899,20 @@ def gram_index(
     exchange carries one row per distinct gram per map task, never
     one per positional occurrence (the r9 hot-gram verdict).
 
-    ``held=True`` materializes the index via eager localCheckpoint —
-    the production serving shape, where the index persists from the
-    last corpus pass and per-batch admission only pays the probe (the
-    BPE/DSIR/textrank trained-artifact contract; build cost is a
-    bounded one-time action, recorded in bench.py's note). Heaps'
-    law bounds it far below the token stream: ~8 B x distinct grams.
-    ``held=False`` keeps the lazy plan for one-shot compositions.
+    The index is held through ``scoped_cache`` — the production
+    serving shape, where the index persists from the last corpus pass
+    and per-batch admission only pays the probe. The first action
+    builds it; ``release_scoped`` frees it and a later action
+    recomputes it from its plan. Heaps' law bounds it far below the
+    token stream: ~8 B x distinct grams.
     """
-    idx = (
+    from universal_importer_duckdb_spark.caching import scoped_cache
+
+    return scoped_cache(
         positioned_ngrams(at_rest, n, text_col, id_col, hasher=_gram64)
         .select("gram")
         .distinct()
     )
-    return idx.localCheckpoint(eager=True) if held else idx
 
 
 def store_gram_index(
@@ -926,8 +925,8 @@ def store_gram_index(
 ) -> DataFrame:
     """Persist the at-rest gram index as a BUCKETED table — the 100 TB
     deployment of :func:`gram_index`, where the index outlives the
-    session (a ``held`` localCheckpoint lives only as long as its
-    executors). Bucketed by ``gram``, every per-batch probe join
+    session (a cached index lives only as long as the session).
+    Bucketed by ``gram``, every per-batch probe join
     (``incremental_duplicate_spans`` / ``ingest_novelty`` via
     ``index=``) reads the stored side WITHOUT an exchange — the one
     build shuffle is paid at write time and amortized over every
@@ -971,9 +970,10 @@ def incremental_duplicate_spans(
 
     Scale shape: in production the at-rest side is the STORED
     distinct gram index of the last corpus pass (:func:`gram_index`,
-    8 bytes per distinct gram), not a rescan — pass it as ``index``
-    to serve batches against the held artifact; when omitted it is
-    derived from ``at_rest`` inline (one-shot/test shape). The join
+    8 bytes per distinct gram), not a rescan: when ``index`` is
+    omitted the held index is built from ``at_rest`` by the first
+    action; pass a stored index (:func:`store_gram_index`) as
+    ``index`` to serve batches from the bucketed table. The join
     is the same gram-keyed left-semi as span decontamination, and
     only the arriving batch's hit windows reach the island merge.
     Gram space xxhash64 (corpus-sized index, same exposure argument
@@ -1025,9 +1025,9 @@ def ingest_novelty(
     other arrivals (the incremental-family contract).
 
     Scale shape: the at-rest side is the distinct stored gram index
-    (:func:`gram_index` — pass it as ``index`` to serve from the held
-    artifact, or omit to derive it from ``at_rest`` inline; 8 bytes
-    per distinct gram, map-side-combined before its one exchange);
+    (:func:`gram_index`, held, when ``index`` is omitted — or a
+    stored index passed as ``index``; 8 bytes per distinct gram,
+    map-side-combined before its one exchange);
     the arriving side is one positional explode joined LEFT against
     the index (membership marker, AQE-skew-splittable) into a
     map-side-combinable per-document count pair. Gram space xxhash64

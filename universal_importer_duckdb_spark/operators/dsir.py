@@ -130,6 +130,12 @@ def dsir_contribution_artifact(
         ).isNull(),
         contrib_val,
     )
+    # Both artifacts stay lineage cuts, not scoped_cache: held in the
+    # session cache, the warm re-query was slower — docs_dsir_importance
+    # at sf0.1, 4 vCPUs, median of 5 runs after release + clearCache,
+    # 6 interleaved sweeps: 0.194 s checkpointed vs 0.224 s cached,
+    # slower in 6 of 6 pairs (stream_dsir_scores, which rebuilds the
+    # artifact per call, was 0.96 vs 0.76 s the other way).
     # per-WORD contribution table — THE held artifact (the shipped
     # importance table a production DSIR run exports): vocab-sized
     # joins only, materialized once via localCheckpoint so each

@@ -114,6 +114,12 @@ def bigram_lm_artifact(
         F.count(F.lit(1)).cast("bigint").alias("__c2")
     )
     c1 = c2.groupBy("w1").agg(F.sum("__c2").cast("bigint").alias("__c1"))
+    # a lineage cut, not scoped_cache: held in the session cache, the
+    # warm re-query was slower — docs_bigram_lm_bits at sf0.1, 4 vCPUs,
+    # median of 5 runs after release + clearCache, 6 interleaved
+    # sweeps: 0.187 s checkpointed vs 0.263 s cached, slower in 6 of 6
+    # pairs (stream_lm_bits, which rebuilds the artifact per call, was
+    # 1.00 vs 0.88 s the other way)
     return (
         c2.join(c1, "w1")
         .select(

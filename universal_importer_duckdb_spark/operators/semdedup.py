@@ -51,6 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from universal_importer_duckdb_spark.caching import scoped_cache
+
 # ~0.1% of the global quantized pair-distance distribution on the
 # synthetic embeddings; prunes ~8% at sf0.01 and ~19% at sf0.1.
 EPS2_DEFAULT = 1_250_000_000_000
@@ -222,7 +224,6 @@ def incremental_semdedup(
     sample_size: int = 2048,
     iters: int = 5,
     max_cluster_size: int | None = MAX_CLUSTER_SIZE_DEFAULT,
-    held: bool = False,
 ) -> DataFrame:
     """Admission control for newly-ingested vectors against a
     SemDeDup'd at-rest corpus: an arriving vector is ADMITTED iff no
@@ -246,13 +247,13 @@ def incremental_semdedup(
     zip_with/aggregate fold (:func:`_admit_against_kept`) remains the
     STREAMING twins' stream-static shape (a cogroup cannot be
     stream-static) and the kernel's live differential oracle in
-    tests. ``held=True`` materializes the at-rest artifacts once at
-    plan construction (see :func:`at_rest_artifacts`) — the serving
-    shape the registry entries bench.
+    tests. The at-rest artifacts are held (see
+    :func:`at_rest_artifacts`) — the serving shape the registry
+    entries bench.
     """
     C, kept_q = at_rest_artifacts(
         at_rest, n_clusters, eps2, vec_col, id_col, sample_size, iters,
-        max_cluster_size=max_cluster_size, held=held,
+        max_cluster_size=max_cluster_size,
     )
     assigned = _assign_with_q(arriving, C, vec_col, id_col)
     return _admit_against_kept_kernel(
@@ -269,7 +270,6 @@ def at_rest_artifacts(
     sample_size: int = 2048,
     iters: int = 5,
     max_cluster_size: int | None = MAX_CLUSTER_SIZE_DEFAULT,
-    held: bool = False,
 ):
     """The deployed admission state: the trained centroid matrix and
     the (cluster, quantized-vector) frame of KEPT at-rest members. In
@@ -277,15 +277,12 @@ def at_rest_artifacts(
     computed here from the at-rest frame so batch and streaming
     ingest share one definition.
 
-    ``held=True`` materializes the kept-member frame via eager
-    localCheckpoint — the production serving shape, where the at-rest
-    prune ran once in the last corpus pass and per-batch admission
-    only pays assignment + the cluster probe (the ``gram_index(held=
-    True)`` / BPE / DSIR trained-artifact contract; the build is a
-    bounded one-time action whose cost is recorded in
-    OPTIMIZATION_r16.md). ``held=False`` keeps the lazy plan for
-    one-shot compositions; the streaming twins keep it (their drain
-    harness re-plans per micro-batch against the static side)."""
+    The kept-member frame is held through ``scoped_cache`` — the
+    production serving shape, where the at-rest prune ran once in the
+    last corpus pass and per-batch admission only pays assignment +
+    the cluster probe (the ``gram_index`` / DSIR trained-artifact
+    contract). The first action builds it; ``release_scoped`` frees
+    it and a later action recomputes the same rows from its plan."""
     from universal_importer_duckdb_spark.operators.similarity import (
         ivf_train_centroids,
     )
@@ -303,9 +300,7 @@ def at_rest_artifacts(
     kept_q = verdicts.filter(F.col("kept")).select(
         "cluster", F.col("q").alias("qk")
     )
-    if held:
-        kept_q = kept_q.localCheckpoint(eager=True)
-    return C, kept_q
+    return C, scoped_cache(kept_q)
 
 
 def _assign_with_q(

@@ -345,6 +345,8 @@ def matryoshka_recall(
     runs on its own trained embeddings."""
     from functools import reduce
 
+    from universal_importer_duckdb_spark.caching import scoped_cache
+
     if any(d < 1 or d > len(query_vec) for d in dims):
         # a tier wider than the vector would zip_with-pad with NULLs
         # and fold every cosine to NULL silently
@@ -388,11 +390,9 @@ def matryoshka_recall(
         )
 
     # the full-dim reference IS the widest tier's id set — reuse it
-    # (k rows, localCheckpoint) instead of a fifth takeOrdered scan
-    full = (
-        topk_for(len(query_vec))
-        .select(F.col(id_col).alias("__fid"))
-        .localCheckpoint(eager=False)
+    # (k rows, held) instead of a fifth takeOrdered scan
+    full = scoped_cache(
+        topk_for(len(query_vec)).select(F.col(id_col).alias("__fid"))
     )
     tiers = reduce(
         lambda a, b: a.unionAll(b),

@@ -811,11 +811,11 @@ def langid_profile(
     """The TRAINED ARTIFACT of the rank-profile classifier: per
     language, the top-``m`` char trigrams ranked by (count desc,
     trigram asc) — ``(plang, tg, lrank)``, n_langs x m rows. Vocab-
-    bounded, so it is materialized (localCheckpoint) and every
-    subsequent scoring run pays ONE corpus pass (the doc side) — the
-    same materialize-vocab-bounded / recompute-corpus-bounded
-    contract as the DSIR artifact. Without the pin, the profile's
-    lineage would re-run the corpus explode on every action.
+    bounded, so it is held (scoped_cache) and every subsequent
+    scoring run pays ONE corpus pass (the doc side) — the same
+    hold-vocab-bounded / recompute-corpus-bounded contract as the
+    DSIR artifact. Without the hold, the profile's lineage would
+    re-run the corpus explode on every action.
 
     r10: trigram counting happens per-document map-side first
     (sorted-array run-length encode, `_trigram_rle_pairs`), so the
@@ -824,6 +824,8 @@ def langid_profile(
     raw trigram stream the r9 form shuffled — and the map-side
     partial sum shrinks it again to distinct-vocab x langs."""
     from pyspark.sql import Window
+
+    from universal_importer_duckdb_spark.caching import scoped_cache
 
     pairs = docs.select(
         F.col(lang_col),
@@ -839,11 +841,10 @@ def langid_profile(
     w_lang = Window.partitionBy(lang_col).orderBy(
         F.desc("__c"), F.asc("tg")
     )
-    return (
+    return scoped_cache(
         lang_counts.withColumn("lrank", F.row_number().over(w_lang))
         .filter(F.col("lrank") <= m)
         .select(F.col(lang_col).alias("plang"), "tg", "lrank")
-        .localCheckpoint(eager=False)
     )
 
 

@@ -243,6 +243,12 @@ def top_collocations(
             ),
         ),
     )
+    # a lineage cut, not scoped_cache: the four reads below (kept,
+    # unigrams twice, total) each pay an in-memory columnar scan of a
+    # cached (a, b, c) table, and that made the re-query slower —
+    # docs_top_collocations at sf0.1, 4 vCPUs, warm re-query median of
+    # 8: 0.22 s checkpointed vs 0.33-0.37 s cached (6 vs 7 jobs), and
+    # 0.110 vs 0.192 s in the 5-run bench protocol (3 sweeps each)
     ab = (
         docs.select(F.explode(ext).alias("p"))
         .select("p.a", "p.b")

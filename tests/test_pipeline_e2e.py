@@ -158,7 +158,7 @@ def test_caller_frame_without_ingest_ord_still_dedups(spark, tmp_path):
     _ingest_ord and no order_cols: an ingest order is derived so dedup
     ALWAYS runs (silently skipping it would leak duplicates into every
     projection — the reference always dedups), in the counted and the
-    lazy run alike."""
+    uncounted run alike."""
     import copy
 
     from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
@@ -239,6 +239,77 @@ def _write_fixture(tmp_path, csv_text: str, **settings) -> dict:
     return cfg
 
 
+def _operator_chain(spark, cfg: dict, out_dir: str, today: str = "2026-08-13"):
+    """The stage-by-stage operator chain, the oracle of the routed run
+    in skip mode: ``read_csv_with_ingest_order`` → ``validate_dataframe``
+    → ``dedupe_cascade`` → ``execute_custom_validations`` →
+    ``export_csv``/``save_errors``. Each stage returns ``(kept,
+    rejected)``; rules on one field share that field's error file."""
+    from universal_importer_duckdb_spark.config.loader import validate_config
+    from universal_importer_duckdb_spark.config.schema_compiler import compile_schema
+    from universal_importer_duckdb_spark.operators.dedup import dedupe_cascade
+    from universal_importer_duckdb_spark.operators.project import create_projections
+    from universal_importer_duckdb_spark.operators.rules import execute_custom_validations
+    from universal_importer_duckdb_spark.operators.validate import validate_dataframe
+    from universal_importer_duckdb_spark.plans.pipeline import PipelineResult
+    from universal_importer_duckdb_spark.sources.readers import (
+        INGEST_ORD,
+        read_csv_with_ingest_order,
+    )
+    from universal_importer_duckdb_spark.sources.writers import export_csv, save_errors
+
+    details = validate_config(cfg, "employees")
+    settings, validations = details["settings"], details["validations"]
+    schema = compile_schema(validations["schema"]["fields"])
+    source = read_csv_with_ingest_order(spark, details["source"])
+    valid, errors = validate_dataframe(source, schema, ingest_ord=INGEST_ORD)
+    kept, dups = dedupe_cascade(
+        valid, settings["unique_composite"], settings["duplicate_resolution"], INGEST_ORD
+    )
+    kept, issues = execute_custom_validations(
+        kept, validations["custom"]["rules"], mode="skip", today=today
+    )
+    stage = kept.drop(INGEST_ORD)
+    projections = create_projections(
+        spark, "employees", stage, details["projections"], schema.columns
+    )
+    export_csv(projections, out_dir)
+    save_errors("employees", "schema_validation", errors, out_dir)
+    save_errors("employees", "duplicates", dups.drop(INGEST_ORD), out_dir)
+    by_field = {}
+    for issue in issues:
+        if issue["invalid"] is not None:
+            invalid = issue["invalid"].drop(INGEST_ORD)
+            f = issue["field"]
+            by_field[f] = by_field[f].unionByName(invalid) if f in by_field else invalid
+    for f, invalid in by_field.items():
+        save_errors("employees", f"custom_{f}", invalid, out_dir)
+    return PipelineResult(
+        entity="employees", stage=stage, schema_errors=errors,
+        duplicates=dups.drop(INGEST_ORD), custom_issues=issues, projections=projections,
+    )
+
+
+def _multiset(df, drop=()):
+    return sorted(df.drop(*drop).collect(), key=repr)
+
+
+def _assert_uncounted_matches(spark, cfg: dict, counted) -> None:
+    """The uncounted run (the same routed frame, uncached) returns the
+    counted run's rows: stage, duplicates, schema errors (their ``row``
+    is NULL without an ingest order) and each rule's invalid rows."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    lazy = run_pipeline(spark, cfg, "employees", today="2026-08-13", compute_summary=False)
+    assert lazy.summary is None and lazy.sink_counts == {}
+    assert _multiset(lazy.stage) == _multiset(counted.stage)
+    assert _multiset(lazy.duplicates) == _multiset(counted.duplicates)
+    assert _multiset(lazy.schema_errors, ["row"]) == _multiset(counted.schema_errors, ["row"])
+    assert len(lazy.custom_issues) == len(counted.custom_issues)
+    for got, want in zip(lazy.custom_issues, counted.custom_issues):
+        assert _multiset(got["invalid"]) == _multiset(want["invalid"])
+
+
 EMAIL_MSG = (
     "email: string should match pattern "
     "'^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}$'"
@@ -280,37 +351,45 @@ def test_output_files_row_multisets(pipeline_result):
     assert [r[6] for r in rows[1:]] == ["3", "6"]
 
 
+# born in the 1980s or later fails; of those, Di (1999) fails age_gte first
+BORN_BEFORE_1980 = {"field": "birthday_on", "validation": "regex_match",
+                    "params": {"pattern": "^19[0-7]"}}
+
+
 @pytest.mark.parametrize(
-    "settings, expected",
+    "settings, extra_rules, expected",
     [
-        ({}, (12, 7, 2, 2, 1)),
-        ({"duplicate_resolution": "first"}, (12, 7, 2, 2, 1)),
-        ({"duplicate_resolution": "exclude_all"}, (12, 5, 2, 4, 1)),
+        ({}, [], (12, 7, 2, 2, 1)),
+        ({"duplicate_resolution": "first"}, [], (12, 7, 2, 2, 1)),
+        ({"duplicate_resolution": "exclude_all"}, [], (12, 5, 2, 4, 1)),
         ({"unique_composite": [["employee_id", "company_id"], ["company_id", "salary_amount"]]},
-         (12, 7, 2, 2, 1)),
+         [], (12, 7, 2, 2, 1)),
         # every valid row shares company 101: the stage ends up empty
         ({"duplicate_resolution": "exclude_all",
-          "unique_composite": [["company_id"], ["employee_id"]]}, (12, 0, 2, 10, 0)),
+          "unique_composite": [["company_id"], ["employee_id"]]}, [], (12, 0, 2, 10, 0)),
+        # two rules on one field share its sink and its error file
+        ({}, [BORN_BEFORE_1980], (12, 4, 2, 2, 4)),
     ],
-    ids=["last", "first", "exclude_all", "cascade_last", "cascade_exclude_all"],
+    ids=["last", "first", "exclude_all", "cascade_last", "cascade_exclude_all",
+         "same_field_rules"],
 )
-def test_routed_run_matches_operator_chain(spark, tmp_path, settings, expected):
+def test_routed_run_matches_operator_chain(spark, tmp_path, settings, extra_rules, expected):
     """The counted run (one routed frame) writes the same files, row for
-    row, as the lazy operator chain (validate, dedupe_cascade, rules),
-    and its summary — (total, valid, schema errors, duplicates, custom
-    errors) — counts those files' rows."""
+    row, as the operator chain (validate, dedupe_cascade, rules), and
+    its summary — (total, valid, schema errors, duplicates, custom
+    errors) — counts those files' rows. The uncounted run returns the
+    counted run's rows."""
     from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
 
     cfg = _write_fixture(tmp_path, CSV, **settings)
+    cfg["transformations_config"]["employees"]["validations"]["custom"]["rules"] += extra_rules
     routed = run_pipeline(
         spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "routed")
     )
-    run_pipeline(
-        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "chain"),
-        compute_summary=False,
-    )
+    _operator_chain(spark, cfg, str(tmp_path / "chain"))
     files = _outputs(str(tmp_path / "chain"))
     assert _outputs(str(tmp_path / "routed")) == files
+    _assert_uncounted_matches(spark, cfg, routed)
 
     def rows(name):
         return len(files.get(f"employees_{name}_errors.csv", [()])) - 1
@@ -352,6 +431,26 @@ def test_stop_mode_on_custom_rule_raises(spark, tmp_path):
         match="Custom validation 'age_gte' failed for 1 rows on field 'birthday_on'",
     ):
         run_pipeline(spark, cfg, "employees", today="2026-08-13")
+
+
+def test_stop_mode_passes_clean_data_and_always_counts(spark, tmp_path):
+    """With nothing to stop on, a stop-mode run returns the stage; it
+    counts even when asked not to, since the gate needs the counts."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    lines = CSV.splitlines(keepends=True)
+    bad = ("cy-bad-email", "not-a-date", "1999-12-31")  # two schema errors, one age_gte
+    clean = "".join(l for l in lines if not any(b in l for b in bad))
+    for cascade in ([["employee_id", "company_id"]],
+                    [["employee_id", "company_id"], ["company_id", "salary_amount"]]):
+        cfg = _write_fixture(tmp_path, clean, custom_validation_mode="stop",
+                             unique_composite=cascade)
+        for compute_summary in (True, False):
+            result = run_pipeline(spark, cfg, "employees", today="2026-08-13",
+                                  compute_summary=compute_summary)
+            assert result.summary.valid_records == 7
+            assert result.sink_counts == {"kept": 7, "duplicates": 2}
+            assert result.stage.count() == 7
 
 
 def test_no_duplicates_writes_no_duplicates_file(spark, tmp_path):
@@ -453,11 +552,104 @@ def test_multi_partition_source_rows_match_stamped_order(spark, tmp_path):
         spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "routed")
     )
     assert spark.read.option("header", True).csv(str(src)).rdd.getNumPartitions() == 3
-    chain = run_pipeline(
-        spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "chain"),
-        compute_summary=False,
-    )
+    chain = _operator_chain(spark, cfg, str(tmp_path / "chain"))
     assert _outputs(str(tmp_path / "routed")) == _outputs(str(tmp_path / "chain"))
     got = sorted((r.employee_id, r.row) for r in routed.schema_errors.collect())
     assert got == sorted((r.employee_id, r.row) for r in chain.schema_errors.collect())
     assert sorted(r for _, r in got) != [3, 6]  # file order is not line order here
+    _assert_uncounted_matches(spark, cfg, routed)
+
+
+def test_uncounted_run_writes_nothing(spark, tmp_path):
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(tmp_path, CSV)
+    with pytest.raises(ValueError, match="output_dir needs compute_summary=True"):
+        run_pipeline(
+            spark, cfg, "employees", today="2026-08-13", output_dir=str(tmp_path / "out"),
+            compute_summary=False,
+        )
+    assert not (tmp_path / "out").exists()
+
+
+def test_uncounted_cascade_plan_filters_before_each_exchange(spark, tmp_path):
+    """A two-key cascade, uncounted: one exchange per key, the schema
+    filter below the first, and a WindowGroupLimit (partial before the
+    exchange, final after it) on each key."""
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(
+        tmp_path, CSV,
+        unique_composite=[["employee_id", "company_id"], ["company_id", "salary_amount"]],
+    )
+    lazy = run_pipeline(spark, cfg, "employees", today="2026-08-13", compute_summary=False)
+    plan = lazy.stage._jdf.queryExecution().executedPlan().toString()
+    nodes = [line.lstrip(" :+-") for line in plan.split("== Initial Plan ==")[0].splitlines()]
+    names = [n.split(" ")[0] for n in nodes]
+    assert names.count("Exchange") == 2, plan
+    limits = [n for n in nodes if n.startswith("WindowGroupLimit")]
+    assert [n.rsplit(", ", 1)[1] for n in limits] == ["Final", "Partial"] * 2, plan
+    # below the first exchange: a Filter over the scan (the plan prints top-down)
+    first = len(names) - 1 - names[::-1].index("Exchange")
+    assert "Filter" in names[first:], plan
+
+
+def test_uncounted_run_runs_no_job_but_the_header_read(spark, tmp_path):
+    from universal_importer_duckdb_spark.plans.pipeline import run_pipeline
+
+    cfg = _write_fixture(tmp_path, CSV)
+    caller = spark.read.option("header", True).csv(str(tmp_path / "employees.csv"))
+    sc = spark.sparkContext
+
+    def jobs(**kw):
+        group = f"uncounted-{len(kw)}-{tmp_path.name}"
+        sc.setJobGroup(group, "uncounted run")
+        try:
+            run_pipeline(spark, cfg, "employees", today="2026-08-13",
+                         compute_summary=False, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    assert jobs(source_df=caller) == []
+    # the config CSV: the header read that names its columns
+    assert len(jobs()) == 1
+
+
+@pytest.mark.parametrize(
+    "case, code, message",
+    [
+        ("missing_config", 66, "File not found: [Errno 2] No such file or directory: "),
+        ("missing_source", 66, "File not found: [Errno 2] No such file or directory: "),
+        ("unknown_entity", 78, "Configuration error: \"Entity 'staff' not found in config\""),
+        ("stop_failure", 65,
+         "Validation error: Schema validation failed for 2 rows in 'employees'"),
+    ],
+)
+def test_cli_error_exit_codes(spark, tmp_path, capsys, case, code, message):
+    """Each error kind prints one line and exits with its own code, with
+    no traceback: a missing config or source file, an unknown entity, a
+    stop-mode validation failure."""
+    import yaml
+
+    from universal_importer_duckdb_spark.plans.pipeline import main
+
+    cfg = _write_fixture(tmp_path, CSV)
+    ent = cfg["transformations_config"]["employees"]
+    cfg_path, entity = tmp_path / "config.yaml", "employees"
+    if case == "missing_source":
+        ent["source"] = str(tmp_path / "absent.csv")
+    elif case == "unknown_entity":
+        entity = "staff"
+    elif case == "stop_failure":
+        ent["settings"]["custom_validation_mode"] = "stop"
+    if case != "missing_config":
+        cfg_path.write_text(yaml.safe_dump(cfg))
+    assert main([entity, "--config", str(cfg_path), "--output_dir",
+                 str(tmp_path / "out")]) == code
+    out, err = capsys.readouterr()
+    assert out.startswith(message) and out.count("\n") == 1, out
+    missing = {"missing_config": cfg_path, "missing_source": tmp_path / "absent.csv"}
+    if case in missing:
+        assert out == f"{message}'{missing[case]}'\n"
+    assert "Traceback" not in out + err and "Exception" not in out + err

@@ -127,6 +127,36 @@ def test_dedup_single_exchange(spark, sf_dir):
     assert "Window" in wplan
 
 
+def _sections(plan: str) -> dict[int, str]:
+    """A formatted plan's numbered detail sections, by node number
+    (numbers grow from the leaves up)."""
+    return {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", plan, flags=re.M | re.S)
+    }
+
+
+def test_pipeline_flagship_filters_before_its_one_exchange(spark, sf_dir):
+    """The uncounted pipeline's stage (a sink filter of the routed
+    frame) keeps the operator chain's plan: the validation filter at
+    the scan, one exchange, and the dedup's WindowGroupLimit both
+    before it (Partial) and after it (Final)."""
+    plan = _plan(eq.pipeline_flagship(spark, sf_dir))
+    sections = _sections(plan)
+    exchanges = [n for n, s in sections.items() if s.startswith(f"({n}) Exchange")]
+    assert len(exchanges) == 1, plan
+    ex = exchanges[0]
+    assert any(
+        s.startswith(f"({n}) Filter") and "RLIKE(l_returnflag" in s
+        for n, s in sections.items() if n < ex
+    ), plan
+    limits = sorted(
+        (n < ex, s.rsplit(", ", 1)[1])
+        for n, s in sections.items() if s.startswith(f"({n}) WindowGroupLimit")
+    )
+    assert limits == [(False, "Final"), (True, "Partial")], plan
+
+
 def test_validate_is_shuffle_free(spark, sf_dir):
     plan = _plan(eq.validate_customer_valid(spark, sf_dir))
     assert "Exchange" not in plan  # narrow map over the scan

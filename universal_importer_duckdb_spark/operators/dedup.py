@@ -49,12 +49,13 @@ def dedup_rank_sql(
     order (``last``), or the group size (``exclude_all``). A row is
     kept iff the value is 1.
 
-    ``scope`` (a SQL boolean) leads the partition, so rows outside the
+    ``scope`` (a SQL boolean) joins the partition, so rows outside the
     scope (e.g. schema errors, or rows an earlier key of a cascade
-    removed) never rank against rows inside it."""
+    removed) never rank against rows inside it. It comes after the
+    keys: the sort's prefix is its first column, which must be a key."""
     if resolution not in RESOLUTIONS:
         raise ValueError(f"resolution must be one of {RESOLUTIONS}")
-    part = ([scope] if scope else []) + [quote_ident(k) for k in keys]
+    part = [quote_ident(k) for k in keys] + ([scope] if scope else [])
     over = f"PARTITION BY {', '.join(part)}"
     if resolution == "exclude_all":
         return f"count(1) OVER ({over})"

@@ -13,9 +13,12 @@ cached once; a single ``groupBy("_sink", <partition>)`` aggregate
 fills the cache and returns every summary number (plus the
 per-partition sizes that turn the read-time row id into the dense
 1-based error ``row``), and each output — the stage, the projections,
-each error file — is a filter of the cache. The lazy run
-(``compute_summary=False``) keeps the stage-by-stage operator chain,
-where each stage returns ``(kept, rejected)``, and counts nothing.
+each error file — is a filter of the cache. The uncounted run
+(``compute_summary=False``) declares the same routed frame, uncached,
+and returns its sink filters without running an action; Catalyst
+pushes each filter down the lineage (the validation filter below the
+dedup exchange, ``WindowGroupLimit`` on each key), so the stage plan
+is the one the stage-by-stage operator chain would give.
 
 Scale notes: validation is a narrow map (no shuffle); the only
 shuffles are one per dedup composite key. Projections run through
@@ -27,6 +30,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as _dt
+import errno
 import hashlib
 import json
 import os
@@ -34,6 +38,7 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,13 +50,9 @@ from universal_importer_duckdb_spark.config.schema_compiler import (
     quote_ident,
     sql_literal,
 )
-from universal_importer_duckdb_spark.operators.dedup import dedup_rank_sql, dedupe_cascade
+from universal_importer_duckdb_spark.operators.dedup import dedup_rank_sql
 from universal_importer_duckdb_spark.operators.project import create_projections
-from universal_importer_duckdb_spark.operators.rules import (
-    execute_custom_validations,
-    rule_failure,
-    stop_message,
-)
+from universal_importer_duckdb_spark.operators.rules import rule_failure, stop_message
 from universal_importer_duckdb_spark.operators.summary import RunSummary
 from universal_importer_duckdb_spark.operators.validate import (
     ERRORS_COL,
@@ -61,12 +62,8 @@ from universal_importer_duckdb_spark.operators.validate import (
     errors_sql,
     flag_sql,
     typed_columns_sql,
-    validate_dataframe,
 )
-from universal_importer_duckdb_spark.sources.readers import (
-    INGEST_ORD,
-    read_csv_with_ingest_order,
-)
+from universal_importer_duckdb_spark.sources.readers import INGEST_ORD
 from universal_importer_duckdb_spark.sources.writers import export_csv, save_errors
 
 SINK = "_sink"
@@ -124,9 +121,8 @@ def run_pipeline(
     ``source_df`` overrides the config ``source`` CSV. Its
     ``_ingest_ord`` column, if any, is the ingest order and the error
     ``row``; without one, its partition order is stamped with
-    ``monotonically_increasing_id()`` (the lazy run then leaves the
-    error ``row`` NULL). ``order_cols`` orders dedup by those columns
-    instead (error ``row`` is then NULL).
+    ``monotonically_increasing_id()``. ``order_cols`` orders dedup by
+    those columns instead (error ``row`` is then NULL).
 
     ``compute_summary=True`` routes every row once (module docstring):
     one cached frame, one aggregate for the whole summary, then one
@@ -134,15 +130,21 @@ def run_pipeline(
     ``Observation``s, or are counted when there is no ``output_dir``.
     ``result.sink_counts`` holds the aggregate's rows per sink.
 
-    ``compute_summary=False`` skips every counting action and the
-    cache, leaving ``result.summary`` None — the whole run then
-    declares ONE lineage with zero Spark jobs, for callers that only
-    consume ``result.stage``/``result.projections`` (the stop gate
-    still runs its one count when mode is 'stop'). Any other value
-    raises ``ValueError``.
+    ``compute_summary=False`` returns the same routed frame's sink
+    filters, uncached and uncounted, leaving ``result.summary`` None
+    and ``result.sink_counts`` empty. It runs no Spark job over a
+    caller's ``source_df``; reading the config CSV costs one job, the
+    header read. Without a count there are no per-partition offsets,
+    so the error ``row`` is ``_ingest_ord`` when the source has one,
+    else NULL. Writing files and stop mode need the counts: stop mode
+    takes the counted run whatever ``compute_summary`` says, and
+    ``output_dir`` with ``compute_summary=False`` raises
+    ``ValueError``, as does any value but ``True`` or ``False``.
     """
     if not isinstance(compute_summary, bool):
         raise ValueError(f"compute_summary must be True or False, not {compute_summary!r}")
+    if output_dir and not compute_summary:
+        raise ValueError("output_dir needs compute_summary=True: empty sinks write no file")
     details = validate_config(config, entity)
     settings = details.get("settings", {})
     validations = details.get("validations", {})
@@ -159,8 +161,10 @@ def run_pipeline(
         projections=details.get("projections", []),
     )
     today = today or _dt.date.today().isoformat()
-    run = _run_routed if compute_summary else _run_lazy
-    return run(spark, spec, source_df, today, output_dir, fillna, order_cols)
+    return _run_routed(
+        spark, spec, source_df, today, output_dir, fillna, order_cols,
+        count=compute_summary or spec.mode == "stop",
+    )
 
 
 def _check_order_cols(spec: _Spec, order_cols: list[str] | None, columns: list[str]) -> None:
@@ -182,12 +186,20 @@ def _run_routed(
     output_dir: str | None,
     fillna: dict[str, Any] | None,
     order_cols: list[str] | None,
+    count: bool,
 ) -> PipelineResult:
     schema, cols = spec.schema, spec.schema.columns
     if source_df is None:
-        source_df = spark.read.option("header", True).option("inferSchema", False).csv(
-            spec.source
-        )
+        try:
+            source_df = spark.read.option("header", True).option("inferSchema", False).csv(
+                spec.source
+            )
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            raise FileNotFoundError(
+                errno.ENOENT, os.strerror(errno.ENOENT), spec.source
+            ) from None
     keep = [INGEST_ORD] if INGEST_ORD in source_df.columns else []
     _check_order_cols(spec, order_cols, cols + keep)
     if order_cols:
@@ -212,19 +224,21 @@ def _run_routed(
         *typed_columns_sql(schema),
         f"CASE WHEN {FLAG_COL} THEN {errors_sql(schema)} END AS {_MSG}",
         *[quote_ident(k) for k in keep],
-        FLAG_COL,
+        f"NOT {FLAG_COL} AS __sc0",
     )
-    ranks: list[str] = []
+    # __sc{i}: the rows key i ranks, i.e. the valid rows every earlier
+    # key kept. A named column, because Catalyst pushes a filter below
+    # a window only when every PARTITION BY item is a plain column.
     for i, keys in enumerate(spec.keys):
-        # each key of the cascade ranks only the rows every earlier key kept
-        scope = " AND ".join([f"NOT {FLAG_COL}"] + [f"{r} = 1" for r in ranks])
-        rank = dedup_rank_sql(keys, spec.resolution, order, scope=f"({scope})")
-        ranked = ranked.selectExpr("*", f"{rank} AS __rk{i}")
-        ranks.append(f"__rk{i}")
+        rank = dedup_rank_sql(keys, spec.resolution, order, scope=f"__sc{i}")
+        ranked = ranked.selectExpr("*", f"{rank} AS __rk{i}").selectExpr(
+            "*", f"__sc{i} AND __rk{i} = 1 AS __sc{i + 1}"
+        )
+    kept_scope = f"__sc{len(spec.keys)}"
 
-    sink = F.when(F.col(FLAG_COL), SCHEMA_SINK)
-    if ranks:
-        sink = sink.when(F.expr(" OR ".join(f"{r} <> 1" for r in ranks)), DUP_SINK)
+    sink = F.when(~F.col("__sc0"), SCHEMA_SINK)
+    if spec.keys:
+        sink = sink.when(~F.col(kept_scope), DUP_SINK)
     # rules sharing a field share its sink (and its error file)
     issues: list[dict[str, Any]] = []
     for rule in spec.rules:
@@ -235,23 +249,31 @@ def _run_routed(
             issue["sink"] = f"custom_{rule.get('field')}"
             sink = sink.when(fail, issue["sink"])
         issues.append(issue)
-    routed = scoped_cache(
-        ranked.withColumn(SINK, sink.otherwise(KEPT)).drop(FLAG_COL, *ranks)
+    # kept_scope stays: the rows every key kept, the only ones that
+    # reach the stage or a rule's sink
+    n_keys = len(spec.keys)
+    routed = ranked.withColumn(SINK, sink.otherwise(KEPT)).drop(
+        *[f"__sc{i}" for i in range(n_keys)], *[f"__rk{i}" for i in range(n_keys)]
     )
 
-    # THE action: fills the cache and counts every sink, per partition
-    by = [F.col(SINK)]
-    if keep == [_MID]:
-        by.append(F.expr(f"shiftright({_MID}, 33)").alias("pid"))
-    aggs = routed.groupBy(*by).agg(
-        F.expr("count(1)").alias("n"),
-        *([F.expr(f"min({_MID})").alias("lo")] if keep == [_MID] else []),
-    ).collect()
+    aggs = []
+    if count:
+        # THE action: fills the cache and counts every sink, per partition
+        routed = scoped_cache(routed)
+        by = [F.col(SINK)]
+        if keep == [_MID]:
+            by.append(F.expr(f"shiftright({_MID}, 33)").alias("pid"))
+        aggs = routed.groupBy(*by).agg(
+            F.expr("count(1)").alias("n"),
+            *([F.expr(f"min({_MID})").alias("lo")] if keep == [_MID] else []),
+        ).collect()
     counts: dict[str, int] = {}
     for r in aggs:
         counts[r[SINK]] = counts.get(r[SINK], 0) + r["n"]
 
     result = PipelineResult(entity=spec.entity, sink_counts=counts, custom_issues=issues)
+    # the reference reuses custom_validation_mode for the schema-error
+    # gate too (main.py:435-439, a conflation kept for parity)
     if spec.mode == "stop":
         failed = [(SCHEMA_SINK, None)] + [(i["sink"], i) for i in issues if not i["skipped"]]
         for name, issue in failed:
@@ -265,13 +287,17 @@ def _run_routed(
                 raise ValueError(stop_message(issue, n))
 
     def sink_rows(name: str) -> DataFrame:
-        return routed.filter(f"{SINK} = {sql_literal(name)}")
+        # naming the scope of the stage and rule sinks lets Catalyst push
+        # their filter down the cascade: WindowGroupLimit on each key,
+        # the validation filter below the first exchange
+        scope = "" if name in (SCHEMA_SINK, DUP_SINK) else f"{kept_scope} AND "
+        return routed.filter(f"{scope}{SINK} = {sql_literal(name)}")
 
     typed_q = [quote_ident(c) for c in cols]
-    if keep == [_MID]:
-        row = _dense_ordinal(aggs)
-    elif INGEST_ORD in keep:
+    if INGEST_ORD in keep:
         row = f"CAST({quote_ident(INGEST_ORD)} AS bigint)"
+    elif keep == [_MID] and count:
+        row = _dense_ordinal(aggs)
     else:
         row = "CAST(NULL AS bigint)"
     result.schema_errors = sink_rows(SCHEMA_SINK).selectExpr(
@@ -288,6 +314,8 @@ def _run_routed(
     result.projections = create_projections(
         spark, spec.entity, result.stage, spec.projections, cols
     )
+    if not count:
+        return result
 
     result.summary = summary = RunSummary(
         entity=spec.entity,
@@ -345,68 +373,6 @@ def _dense_ordinal(aggs: list) -> str:
     return f"({_MID} + element_at(map({pairs}), shiftright({_MID}, 33)))"
 
 
-def _run_lazy(
-    spark: SparkSession,
-    spec: _Spec,
-    source_df: DataFrame | None,
-    today: str,
-    output_dir: str | None,
-    fillna: dict[str, Any] | None,
-    order_cols: list[str] | None,
-) -> PipelineResult:
-    if source_df is None:
-        source_df = read_csv_with_ingest_order(spark, spec.source)
-    result = PipelineResult(entity=spec.entity)
-
-    ingest = INGEST_ORD if INGEST_ORD in source_df.columns else None
-    valid, errors = validate_dataframe(source_df, spec.schema, fillna=fillna, ingest_ord=ingest)
-    result.schema_errors = errors
-
-    # Stop gate: the reference reuses custom_validation_mode for this
-    # decision (main.py:435-439 — setting conflation, kept for parity).
-    if spec.mode == "stop":
-        n_schema_errors = errors.count()
-        if n_schema_errors > 0:
-            raise ValueError(
-                f"Schema validation failed for {n_schema_errors} rows in '{spec.entity}'"
-            )
-
-    order: list[str] = order_cols or [ingest or _MID]
-    if spec.keys:
-        _check_order_cols(spec, order_cols, valid.columns)
-        if order == [_MID]:
-            # caller frame without an order: file order, stamped
-            # JVM-side as in the routed run, so dedup ALWAYS runs when
-            # configured, as in the reference (error rows stay NULL)
-            valid = valid.selectExpr("*", f"monotonically_increasing_id() AS {_MID}")
-        kept, dups = dedupe_cascade(valid, spec.keys, spec.resolution, order)
-    else:
-        kept, dups = valid, valid.limit(0)
-    result.duplicates = dups
-
-    kept, issues = execute_custom_validations(kept, spec.rules, mode=spec.mode, today=today)
-    result.custom_issues = issues
-
-    stage = kept.drop(INGEST_ORD, _MID)
-    result.stage = stage
-    stage.createOrReplaceTempView(f"{spec.entity}_stage")
-    result.projections = create_projections(
-        spark, spec.entity, stage, spec.projections, spec.schema.columns
-    )
-
-    if output_dir:
-        export_csv(result.projections, output_dir)
-        save_errors(spec.entity, SCHEMA_SINK, errors, output_dir)
-        save_errors(spec.entity, DUP_SINK, dups.drop(INGEST_ORD, _MID), output_dir)
-        for issue in issues:
-            if issue.get("invalid") is not None:
-                save_errors(
-                    spec.entity, f"custom_{issue['field']}",
-                    issue["invalid"].drop(INGEST_ORD, _MID), output_dir,
-                )
-    return result
-
-
 def main(argv: list[str] | None = None) -> int:
     """CLI mirroring the reference (main.py:402-406):
     ``python -m universal_importer_duckdb_spark.plans.pipeline <entity>
@@ -416,7 +382,13 @@ def main(argv: list[str] | None = None) -> int:
     ``<output_dir>/run.json`` (strict JSON): the summary fields, rows
     per sink from the routing aggregate, wall time, Spark version and
     ``config_sha256``, the SHA-256 of the entity's config as canonical
-    JSON (sorted keys; YAML dates as ISO strings)."""
+    JSON (sorted keys; YAML dates as ISO strings).
+
+    Errors print one line, as the reference's do, and exit with a code
+    per kind (``sysexits.h``): a missing config or source file
+    ``EX_NOINPUT`` (66), a missing config key ``EX_CONFIG`` (78), a
+    ``ValueError`` (a stop-mode validation failure or a bad setting)
+    ``EX_DATAERR`` (65)."""
     from universal_importer_duckdb_spark.session import get_spark
 
     parser = argparse.ArgumentParser(description="Run the import pipeline for an entity")
@@ -435,13 +407,13 @@ def main(argv: list[str] | None = None) -> int:
         wall_s = time.perf_counter() - t0
     except FileNotFoundError as e:
         print(f"File not found: {e}")
-        return 1
+        return os.EX_NOINPUT
     except KeyError as e:
         print(f"Configuration error: {e}")
-        return 1
+        return os.EX_CONFIG
     except ValueError as e:
         print(f"Validation error: {e}")
-        return 1
+        return os.EX_DATAERR
     print(result.summary.report())
     record = asdict(result.summary) | {
         "sink_counts": result.sink_counts,

@@ -21,11 +21,13 @@ def test_admission_kernel_matches_join_form(spark, sf_dir):
     zip_with/aggregate join form it replaced in the batch path — same
     vec_id/cluster/d2/nn_d2/admitted, including clusters with no kept
     member (nn_d2 = -1, admitted)."""
+    from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
+    )
     from universal_importer_duckdb_spark.operators.semdedup import (
         EPS2_DEFAULT,
         _admit_against_kept,
         _admit_against_kept_kernel,
-        _assign_with_q,
         at_rest_artifacts,
         ingest_split,
     )
@@ -34,7 +36,7 @@ def test_admission_kernel_matches_join_form(spark, sf_dir):
     at_rest, arriving = ingest_split(emb)
     C, kept_q = at_rest_artifacts(at_rest)
     kq = kept_q.localCheckpoint()
-    assigned = _assign_with_q(arriving, C)
+    assigned = assign_to_centroids(arriving, C)
     old = _rows(_admit_against_kept(assigned, kq, EPS2_DEFAULT))
     new = _rows(_admit_against_kept_kernel(assigned, kq, EPS2_DEFAULT))
     assert len(new) > 0
@@ -46,11 +48,13 @@ def test_admission_kernel_null_vector_abstains(spark):
     the kernel must admit them with nn_d2 = -1 — same abstain
     semantics as the join form — and never touch their empty q
     through the GEMM path."""
+    from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
+    )
     from universal_importer_duckdb_spark.operators.semdedup import (
         EPS2_DEFAULT,
         _admit_against_kept,
         _admit_against_kept_kernel,
-        _assign_with_q,
         at_rest_artifacts,
     )
 
@@ -65,7 +69,7 @@ def test_admission_kernel_null_vector_abstains(spark):
     )
     C, kept_q = at_rest_artifacts(rest, n_clusters=2, sample_size=30, iters=2)
     kq = kept_q.localCheckpoint()
-    assigned = _assign_with_q(arr, C)
+    assigned = assign_to_centroids(arr, C)
     old = _rows(_admit_against_kept(assigned, kq, EPS2_DEFAULT))
     new = _rows(_admit_against_kept_kernel(assigned, kq, EPS2_DEFAULT))
     assert new == old
@@ -132,10 +136,12 @@ def test_admission_kernel_guard_fires(spark):
     error instead of shipping an unbounded group into memory."""
     from pyspark.errors.exceptions.captured import PythonException
 
+    from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
+    )
     from universal_importer_duckdb_spark.operators.semdedup import (
         EPS2_DEFAULT,
         _admit_against_kept_kernel,
-        _assign_with_q,
         at_rest_artifacts,
     )
 
@@ -152,7 +158,7 @@ def test_admission_kernel_guard_fires(spark):
         rest, n_clusters=1, sample_size=8, iters=1, max_cluster_size=None
     )
     out = _admit_against_kept_kernel(
-        _assign_with_q(arr, C), kept_q, EPS2_DEFAULT, max_cluster_size=3
+        assign_to_centroids(arr, C), kept_q, EPS2_DEFAULT, max_cluster_size=3
     )
     with pytest.raises(PythonException, match="max_cluster_size"):
         out.collect()

@@ -604,7 +604,25 @@ def oracle_sql():
 #  changed in the single-pass import and have not been certified
 #  since. docs_selfdup_spans and docs_textrank_keywords stay as
 #  touched-module coverage (corpus.py, textrank.py). 24 + 26 = 50.
+#  One top-k core and one assignment kernel: the 8 entries that run
+#  the rewritten re-rank, candidate or assignment code and were not
+#  yet in the window (emb_cosine_topk, emb_ann_lsh_topk, emb_ivf_topk,
+#  docs_hybrid_search_rrf, emb_kmeans_clusters, emb_semdedup,
+#  emb_hard_negatives, emb_knn_join) displace 8 r11-cohort entries
+#  that run none of it: events_top_journeys, both multimodal entries,
+#  orders_expectation_suite, orders_snapshot_drift,
+#  stream_funnel_cohorts, docs_split_leakage_audit and
+#  stream_split_leakage. 32 + 18 = 50.
 _R15_WINDOW = (
+    # ---- one top-k core and one assignment kernel: certify ----
+    "emb_cosine_topk",
+    "emb_ann_lsh_topk",
+    "emb_ivf_topk",
+    "docs_hybrid_search_rrf",
+    "emb_kmeans_clusters",
+    "emb_semdedup",
+    "emb_hard_negatives",
+    "emb_knn_join",
     # ---- held artifacts moved to scoped_cache or measured: certify ----
     "docs_dsir_importance",
     "docs_dsir_resample",
@@ -648,19 +666,11 @@ _R15_WINDOW = (
     "docs_intradoc_segment_dedup",
     "docs_selfdup_spans",
     "docs_source_gram_overlap",
-    "docs_split_leakage_audit",
     "docs_textrank_keywords",
     "emb_ingest_drift",
-    "events_top_journeys",
-    "multimodal_audio_energy",
-    "multimodal_image_tiles",
-    "orders_expectation_suite",
-    "orders_snapshot_drift",
     "rule_age_gte_invalid_orders",
-    "stream_funnel_cohorts",
     "stream_ingest_drift",
     "stream_shipped_quality",
-    "stream_split_leakage",
 )
 
 # Full r14 roster text: git show 4be5471:universal_importer_duckdb_

@@ -23,7 +23,8 @@ The operator composes two primitives the engine already has:
 
 Scale shape (100 TB): training is a bounded driver-side computation
 (the sample collect is capped regardless of corpus size) and the
-centroid matrix rides to executors in the Arrow UDF closure; the one
+centroid matrix rides to executors in the closure of the one
+assignment kernel (similarity.py::assign_to_centroids); the one
 shuffle is the ``groupBy(cluster)`` for the pruning pass. The
 per-cluster kernel is an exact integer GEMM whose working set is
 chunked to O(chunk * |cluster|) — but |cluster| itself must stay
@@ -52,6 +53,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from universal_importer_duckdb_spark.caching import scoped_cache
+from universal_importer_duckdb_spark.operators.similarity import (
+    assign_to_centroids,
+    ivf_train_centroids,
+)
 
 # ~0.1% of the global quantized pair-distance distribution on the
 # synthetic embeddings; prunes ~8% at sf0.01 and ~19% at sf0.1.
@@ -103,18 +108,13 @@ def semdedup(
     stays under the cap, as the paper does — 50k clusters for
     LAION-440M). ``None`` disables the guard.
     """
-    from universal_importer_duckdb_spark.operators.similarity import (
-        ivf_train_centroids,
-    )
-
     C = centroids if centroids is not None else ivf_train_centroids(
         df, n_clusters, vec_col, id_col, sample_size, iters
     )
 
-    # one assignment kernel for the whole module (r8 self-review):
     # the at-rest prune and the arrival-admission paths must quantize
-    # and tie-break identically, so both go through _assign_with_q
-    assigned = _assign_with_q(df, C, vec_col, id_col)
+    # and tie-break identically, so both go through the one kernel
+    assigned = assign_to_centroids(df, C, vec_col, id_col)
     if id_col != "vec_id":
         assigned = assigned.withColumnRenamed(id_col, "vec_id")
 
@@ -255,7 +255,7 @@ def incremental_semdedup(
         at_rest, n_clusters, eps2, vec_col, id_col, sample_size, iters,
         max_cluster_size=max_cluster_size,
     )
-    assigned = _assign_with_q(arriving, C, vec_col, id_col)
+    assigned = assign_to_centroids(arriving, C, vec_col, id_col)
     return _admit_against_kept_kernel(
         assigned, kept_q, eps2, max_cluster_size=max_cluster_size
     )
@@ -283,10 +283,6 @@ def at_rest_artifacts(
     the cluster probe (the ``gram_index`` / DSIR trained-artifact
     contract). The first action builds it; ``release_scoped`` frees
     it and a later action recomputes the same rows from its plan."""
-    from universal_importer_duckdb_spark.operators.similarity import (
-        ivf_train_centroids,
-    )
-
     C = ivf_train_centroids(
         at_rest, n_clusters, vec_col, id_col, sample_size, iters
     )
@@ -301,91 +297,6 @@ def at_rest_artifacts(
         "cluster", F.col("q").alias("qk")
     )
     return C, scoped_cache(kept_q)
-
-
-def _assign_with_q(
-    df: DataFrame,
-    C,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Arrow-batched centroid assignment carrying the quantized
-    vector: ``(<id_col>, <carry_cols...>, cluster, d2, q)``.
-    Stateless, so it runs unchanged on a streaming DataFrame.
-
-    Rows whose vector is NULL (a document not yet embedded, in the
-    admission-funnel shape) assign to cluster -1 with d2 -1 and an
-    empty q — no kept member lives in cluster -1, so the downstream
-    semantic gate abstains on them by construction."""
-    from universal_importer_duckdb_spark.operators.int_kmeans import (
-        int_argmin_dists,
-        quantize_np,
-    )
-
-    Cm = np.asarray(C, dtype=np.int64)
-    carry = list(carry_cols)
-    carry_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in carry
-    )
-    # project BEFORE the Arrow map: mapInPandas pins its input
-    # columns, so an unpruned frame would ship every column (the
-    # embeddings table's label, at 100 TB the whole row) through
-    # Arrow for nothing
-    df = df.select(id_col, *carry, vec_col)
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            present = pdf[vec_col].notna().to_numpy()
-            n = len(pdf)
-            if present.all():
-                xq = quantize_np(
-                    np.asarray(
-                        [
-                            np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]
-                        ],
-                        dtype=np.float64,
-                    )
-                )
-                a, dd = int_argmin_dists(xq, Cm)
-                qs = list(xq)
-            else:
-                a = np.full(n, -1, dtype=np.int64)
-                dd = np.full(n, -1, dtype=np.int64)
-                empty = np.empty(0, dtype=np.int64)
-                qs = [empty] * n
-                if present.any():
-                    xq = quantize_np(
-                        np.asarray(
-                            [
-                                np.asarray(v, dtype=np.float64)
-                                for v in pdf.loc[present, vec_col]
-                            ],
-                            dtype=np.float64,
-                        )
-                    )
-                    ap, dp = int_argmin_dists(xq, Cm)
-                    a[present], dd[present] = ap, dp
-                    ptr = 0
-                    for i in np.flatnonzero(present):
-                        qs[i] = xq[ptr]
-                        ptr += 1
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()
-            out.update({"cluster": a, "d2": dd, "q": qs})
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        _assign,
-        schema=(
-            f"{id_col} bigint{carry_schema}, "
-            "cluster bigint, d2 bigint, q array<bigint>"
-        ),
-    )
 
 
 def _admit_against_kept_kernel(

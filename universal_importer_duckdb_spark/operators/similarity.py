@@ -1,14 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
-- cosine_topk         — exact brute-force top-k vs a query vector (the
-                        correctness baseline; O(n·d) scan, no shuffle
-                        beyond the final top-k)
-- lsh_ann_topk        — random-hyperplane LSH bucket filter + exact
-                        re-rank (the 100 TB path: the scan touches only
-                        candidate buckets; bucket key is precomputable
-                        and partition-prunable when stored)
-- embedding_near_pairs — all-pairs cosine near-dup via shared-bucket
-                        join (never O(n²))
+Structure:
+
+- Candidate generators feeding one exact re-rank. The single-query
+  top-k paths (``cosine_topk_two_phase``, ``lsh_ann_topk``,
+  ``sign_hamming_topk``, ``ivf_topk``) differ only in how they pick
+  candidate rows: a JVM phase-1 score, hyperplane buckets, sign-bit
+  Hamming or IVF lists. Each ends in ``cosine_topk``, the one
+  order-defined exact cosine fold and (cosine desc, id) selection.
+  ``matryoshka_recall`` ranks its prefix tiers with the same fold in
+  its own selection (measured faster; see there). Every path reads
+  its vectors through ``_guarded_vec``: a NULL vector is never a
+  candidate, and a row narrower than the query raises.
+- One centroid-assignment kernel, ``assign_to_centroids``
+  (Arrow-batched integer argmin), behind k-means, ingest drift,
+  SemDeDup and its admission twins. IVF list assignment runs the same
+  batch function (``_assign_batch``) as a scalar Arrow UDF.
+- Pair operators (``hard_negative_pairs``, ``embedding_near_pairs``,
+  ``knn_join_exact``) pre-sift candidates in numpy and re-score the
+  survivors with the same exact fold.
 
 Hyperplanes are generated from a seeded PRNG on the driver (tiny:
 n_planes × dim floats) and broadcast as literal arrays; bucket
@@ -55,16 +65,53 @@ def _norm2_double(a):
     )
 
 
-def dot_product(a, b):
-    return _dot_double(a, b)
-
-
-def norm2(a):
-    return F.sqrt(_norm2_double(a))
-
-
 def cosine(a, b):
-    return dot_product(a, b) / (norm2(a) * norm2(b))
+    return _dot_double(a, b) / (
+        F.sqrt(_norm2_double(a)) * F.sqrt(_norm2_double(b))
+    )
+
+
+def _double_array(xs):
+    """A driver-side vector (the query, a hyperplane) as an
+    array<double> literal."""
+    return F.array(*[F.lit(float(x)) for x in xs])
+
+
+def _guarded_vec(
+    vec_col: str, id_col: str, width: int, what: str = "query dim"
+):
+    """The one read of an embedding column: ``vec_col`` as
+    array<double>, NULL for a NULL vector, and a per-row error for a
+    vector narrower than ``width``. Unguarded, a narrow row would
+    zip_with-pad with NULLs and fold its score to NULL (sorting last
+    silently), pack a truncated sign signature, or break the numpy
+    stack of an assignment batch."""
+    v = F.col(vec_col)
+    ragged = F.raise_error(
+        F.concat(
+            F.lit(f"embedding narrower than the {what} ({width}) for id "),
+            F.col(id_col).cast("string"),
+        )
+    ).cast("array<double>")
+    # size() of the raw column: the cast runs once, on kept rows only
+    return F.when(F.size(v) >= width, v.cast("array<double>")).when(
+        v.isNotNull(), ragged
+    )
+
+
+def _search_rows(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    width: int,
+    what: str = "query dim",
+) -> DataFrame:
+    """The rows a top-k path may return: a NULL vector is never a
+    candidate, and every other vector is read through
+    :func:`_guarded_vec`."""
+    return df.filter(F.col(vec_col).isNotNull()).withColumn(
+        vec_col, _guarded_vec(vec_col, id_col, width, what)
+    )
 
 
 def cosine_topk(
@@ -73,16 +120,20 @@ def cosine_topk(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector. Used as the
-    re-rank stage after a candidate filter (ANN paths) — it inherits
-    the input's partitioning rather than forcing one (a repartition of
-    an already-filtered candidate frame costs more than it buys; for
-    full-corpus scans prefer cosine_topk_two_phase)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
+    """Exact cosine top-k against a literal query vector: the one
+    re-rank and selection every top-k path in this module ends in.
+    Returns ``(<id_col>, <extra_cols...>, cosine)`` for the top-k by
+    (cosine desc, id). The score is the order-defined JVM fold the
+    oracles replay bit for bit. It inherits the input's partitioning
+    rather than forcing one (a repartition of an already-filtered
+    candidate frame costs more than it buys; for full-corpus scans
+    prefer cosine_topk_two_phase)."""
+    rows = _search_rows(df, vec_col, id_col, len(query_vec))
+    score = cosine(F.col(vec_col), _double_array(query_vec))
     return (
-        df.select(F.col(id_col), cosine(v, q).alias("cosine"))
+        rows.select(F.col(id_col), *extra_cols, score.alias("cosine"))
         .orderBy(F.desc("cosine"), id_col)
         .limit(k)
     )
@@ -101,12 +152,11 @@ def cosine_topk_two_phase(
     """Exact cosine top-k in two phases: a JVM-side double-precision
     fold SELECTS the top ``k*overfetch`` candidates (zip-with product
     + aggregate sum — stays in the executor JVM, no Arrow round-trip
-    of the embedding column to a Python worker), then the
-    order-defined exact fold re-ranks only those candidates, so the
-    output is bit-identical to the one-phase exact scan while the
-    re-rank arithmetic touches k*overfetch rows instead of the corpus.
-    The selection score drops the constant |q| factor (order-
-    equivalent) and is never emitted.
+    of the embedding column to a Python worker), then ``cosine_topk``
+    re-ranks only those candidates, so the output is bit-identical to
+    the one-phase exact scan while the re-rank arithmetic touches
+    k*overfetch rows instead of the corpus. The selection score drops
+    the constant |q| factor (order-equivalent) and is never emitted.
 
     Soundness assumption (tie density): phase 1 can only err by
     EXCLUDING a true top-k member, which requires more than
@@ -124,39 +174,23 @@ def cosine_topk_two_phase(
     ``size_hint`` (a cheap row-count estimate, e.g. from the parquet
     footer — NOT a Spark action) gates the candidate phase: when the
     corpus is at most ``4 * k * overfetch`` rows, phase 1 would keep
-    most of it anyway, so the exact fold runs directly on the
+    most of it anyway, so ``cosine_topk`` runs directly on the
     corpus in ONE TakeOrdered — the degraded-to-one-phase form the
     soundness note above describes, minus the wasted selection stage.
     Results are bit-identical either way (phase 2 alone IS the exact
     scan)."""
-    if size_hint is not None and size_hint <= 4 * k * overfetch:
-        qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-        v = F.col(vec_col).cast("array<double>")
-        return (
-            df.select(
-                F.col(id_col), *extra_cols, cosine(v, qlit).alias("cosine")
-            )
-            .orderBy(F.desc("cosine"), id_col)
-            .limit(k)
+    if size_hint is None or size_hint > 4 * k * overfetch:
+        vd = F.col(vec_col)
+        dscore = _dot_double(vd, _double_array(query_vec)) / F.greatest(
+            F.sqrt(_norm2_double(vd)), F.lit(1e-300)
         )
-    vd = F.col(vec_col).cast("array<double>")
-    qd = F.array(*[F.lit(float(x)) for x in query_vec])
-    dscore = _dot_double(vd, qd) / F.greatest(
-        F.sqrt(_norm2_double(vd)), F.lit(1e-300)
-    )
-    cand = (
-        df.select(id_col, *extra_cols, vec_col, dscore.alias("__dscore"))
-        .orderBy(F.desc("__dscore"), id_col)
-        .limit(k * overfetch)
-        .drop("__dscore")
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        cand.select(F.col(id_col), *extra_cols, cosine(v, qlit).alias("cosine"))
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+        df = (
+            _search_rows(df, vec_col, id_col, len(query_vec))
+            .select(id_col, *extra_cols, vec_col, dscore.alias("__dscore"))
+            .orderBy(F.desc("__dscore"), id_col)
+            .limit(k * overfetch)
+        )
+    return cosine_topk(df, query_vec, k, vec_col, id_col, extra_cols)
 
 
 def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -172,8 +206,7 @@ def bucket_signature(vec_col, planes: list[list[float]]):
     v = v.cast("array<double>")
     bits = []
     for p, plane in enumerate(planes):
-        pl = F.array(*[F.lit(float(x)) for x in plane])
-        d = _dot_double(v, pl)
+        d = _dot_double(v, _double_array(plane))
         bits.append(
             F.when(d > 0, F.shiftleft(F.lit(1).cast("bigint"), p)).otherwise(
                 F.lit(0).cast("bigint")
@@ -202,18 +235,16 @@ def lsh_ann_topk(
     dim = len(query_vec)
     from universal_importer_duckdb_spark.operators.dedup_text import spread_for_compute
 
-    df = spread_for_compute(df, id_col)
     planes = _hyperplanes(n_planes, dim, seed)
-    sig = bucket_signature(vec_col, planes)
-
     # query signature computed on the driver (tiny)
     qsig = 0
     for p, plane in enumerate(planes):
         if sum(x * y for x, y in zip(query_vec, plane)) > 0:
             qsig |= 1 << p
-    bucketed = df.withColumn("bucket", sig)
-    cand = bucketed.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qsig))) <= max_probe_hamming
+    rows = _search_rows(spread_for_compute(df, id_col), vec_col, id_col, dim)
+    sig = bucket_signature(vec_col, planes)
+    cand = rows.filter(
+        F.bit_count(sig.bitwiseXOR(F.lit(qsig))) <= max_probe_hamming
     )
     return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
@@ -275,46 +306,18 @@ def sign_hamming_topk(
     qlo = sum(
         1 << (i - half) for i in range(half, dim) if query_vec[i] > 0
     )
-
     ham = F.bit_count(
-        F.col("__hi").bitwiseXOR(F.lit(qhi))
-    ) + F.bit_count(F.col("__lo").bitwiseXOR(F.lit(qlo)))
-    # ragged guard (r10 advice, mirroring matryoshka_recall): an
-    # embedding narrower than the query dim would pack a TRUNCATED
-    # signature (missing dims silently read as sign-0, skewing
-    # Hamming) and NULL-fold its cosine at re-rank, sorting last
-    # silently — raise per row at execution instead.
-    ragged = F.raise_error(
-        F.concat(
-            F.lit(
-                "sign_hamming_topk: embedding narrower than the query "
-                f"dim ({dim}) for id "
-            ),
-            F.col(id_col).cast("string"),
-        )
-    ).cast("bigint")
-    guarded_ham = F.when(
-        F.size(F.col(vec_col)) >= dim, ham.cast("bigint")
-    ).otherwise(ragged)
+        sign_bits(vec_col, 1, half).bitwiseXOR(F.lit(qhi))
+    ) + F.bit_count(
+        sign_bits(vec_col, half + 1, dim - half).bitwiseXOR(F.lit(qlo))
+    )
     cand = (
-        spread_for_compute(df, id_col)
-        .withColumn("__hi", sign_bits(vec_col, 1, half))
-        .withColumn("__lo", sign_bits(vec_col, half + 1, dim - half))
-        .withColumn("__ham", guarded_ham)
-        .orderBy("__ham", id_col)
+        _search_rows(spread_for_compute(df, id_col), vec_col, id_col, dim)
+        .withColumn("hamming", ham.cast("bigint"))
+        .orderBy("hamming", id_col)
         .limit(n_candidates)
     )
-    vd = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(
-            F.col(id_col),
-            F.col("__ham").alias("hamming"),
-            cosine(vd, q).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), id_col)
-        .limit(k)
-    )
+    return cosine_topk(cand, query_vec, k, vec_col, id_col, ("hamming",))
 
 
 def matryoshka_recall(
@@ -331,7 +334,8 @@ def matryoshka_recall(
     truncation does to retrieval. For each prefix width d, take the
     exact cosine top-k under the truncated geometry (slice both sides
     to d, fold, rank) and report its overlap with the full-dimension
-    top-k: ``(dim, n_overlap, recall_milli)``.
+    top-k: ``(dim, n_overlap, recall_milli)``. NULL vectors are never
+    candidates.
 
     Every tier's dot/norm is an independent order-defined fold over
     its own slice (NOT an incremental sum over the previous tier —
@@ -354,39 +358,29 @@ def matryoshka_recall(
             f"matryoshka dims {tuple(dims)} must lie in "
             f"[1, {len(query_vec)}] (the query width)"
         )
-    vd = F.col(vec_col).cast("array<double>")
-    # the same NULL-fold applies to a RAGGED CORPUS ROW narrower than
-    # the widest slice we take — that can only be caught per row, so
-    # the tier score raises at execution instead of sorting the row
-    # last silently (r9 second-review finding). The widest slice is
-    # the FULL-DIMENSION REFERENCE tier (len(query_vec)), not just
-    # max(dims): when max(dims) < len(query_vec) a row with size in
+    # a corpus row narrower than the widest slice taken raises per row.
+    # The widest slice is the FULL-DIMENSION REFERENCE tier
+    # (len(query_vec)), not just max(dims): a row with size in
     # [max(dims), len(query_vec)) would pass a max(dims) guard yet
-    # NULL-fold in the reference top-k (r10 advice).
+    # NULL-fold in the reference top-k.
     dmax = max(max(dims), len(query_vec))
-    ragged = F.raise_error(
-        F.concat(
-            F.lit(
-                "matryoshka: embedding narrower than the widest tier "
-                f"({dmax}) for id "
-            ),
-            F.col(id_col).cast("string"),
-        )
-    ).cast("double")
+    rows = df.filter(F.col(vec_col).isNotNull())
+    vd = _guarded_vec(vec_col, id_col, dmax, "widest tier")
 
+    # Each tier keeps its own one-expression selection instead of
+    # ending in cosine_topk: through cosine_topk (a guarded, sliced
+    # frame per tier) the entry measured slower than the parent's
+    # spread — per-entry A/B at sf0.1, 3 interleaved sweeps of 5 runs,
+    # median 0.296 s (sweeps 0.279-0.297) vs 0.319 s; in one session,
+    # four tiers took 0.214 s in this form and 0.224-0.233 s through
+    # cosine_topk.
     def topk_for(d: int) -> DataFrame:
-        q = F.array(*[F.lit(float(x)) for x in query_vec[:d]])
-        c = F.when(F.size(vd) >= dmax, cosine(F.slice(vd, 1, d), q)).otherwise(
-            ragged
-        )
+        c = cosine(F.slice(vd, 1, d), _double_array(query_vec[:d]))
         return (
-            df.select(F.col(id_col), c.alias("__c"))
+            rows.select(F.col(id_col), c.alias("__c"))
             .orderBy(F.desc("__c"), id_col)
             .limit(k)
-            .select(
-                F.lit(d).cast("bigint").alias("dim"),
-                F.col(id_col),
-            )
+            .select(F.lit(d).cast("bigint").alias("dim"), F.col(id_col))
         )
 
     # the full-dim reference IS the widest tier's id set — reuse it
@@ -603,13 +597,10 @@ def hard_negative_pairs(
         drop_acc=drop_acc,
     )
     survivors = b.groupBy("__bucket").applyInPandas(_presift, out_schema)
-    va, vb = F.col("va"), F.col("vb")
-    # exact emitted score: the sequential-fold dot over sqrt(n2a) *
-    # sqrt(n2b) — NOT the kernel's BLAS value — to match the oracle's
-    # expression tree bit-for-bit on the survivor set
-    exact_cos = _dot_double(va, vb) / (
-        F.sqrt(_norm2_double(va)) * F.sqrt(_norm2_double(vb))
-    )
+    # exact emitted score: the sequential-fold cosine — NOT the
+    # kernel's BLAS value — to match the oracle's expression tree
+    # bit-for-bit on the survivor set
+    exact_cos = cosine(F.col("va"), F.col("vb"))
     return (
         survivors.select(
             "id_a", "id_b", "label_a", "label_b", exact_cos.alias("cosine")
@@ -635,7 +626,7 @@ def ivf_train_centroids(
     regardless of corpus size (per-partition top-k under the hood), so
     training stays O(sample·n_list·dim) on the driver even at 100 TB;
     the integer centroid matrix ships to executors inside the
-    assignment UDF's closure.
+    closure of :func:`assign_to_centroids`.
 
     ``spherical=True`` projects points to the unit sphere before
     quantization (quantize_unit_np — still bit-replayable in SQL via
@@ -644,8 +635,8 @@ def ivf_train_centroids(
     neighbors scatter across lists (the r8 review recall finding —
     measured recall@10 halved vs the spherical form). Keep the default
     (raw L2) for L2 semantics: SemDeDup's eps2 pruning, PQ's
-    reconstruction, kmeans_clusters. Returns a (n_list, dim) int64
-    numpy array."""
+    reconstruction, kmeans_clusters. NULL vectors are left out of the
+    sample. Returns a (n_list, dim) int64 numpy array."""
     from universal_importer_duckdb_spark.operators.int_kmeans import (
         collect_hash_ordered_sample,
         init_indices,
@@ -655,38 +646,83 @@ def ivf_train_centroids(
     )
 
     qz = quantize_unit_np if spherical else quantize_np
-    ids, x = collect_hash_ordered_sample(df, id_col, vec_col, sample_size)
+    ids, x = collect_hash_ordered_sample(
+        df.filter(F.col(vec_col).isNotNull()), id_col, vec_col, sample_size
+    )
     return int_lloyds(qz(x), n_list, iters, init_indices(ids, n_list))
 
 
-def ivf_assign_udf(centroids, spherical: bool = False):
-    """Arrow-batched nearest-centroid assignment (integer argmin, ties
-    to the smaller list id): one numpy pass per batch instead of
-    n_list interpreted array-fold expressions per row — this is the
-    100 TB write path (assignments are computed once at ingest and
-    stored as a partition/cluster column). ``spherical`` must match
-    the trainer's setting."""
+def _assign_batch(vecs: pd.Series, C, spherical: bool = False):
+    """Integer argmin of one Arrow batch of vectors against the integer
+    centroid matrix ``C`` (ties to the smaller cluster id): the
+    ``(cluster, d2, q)`` arrays, with -1, -1 and an empty q for a NULL
+    vector. ``spherical`` quantizes on the unit sphere and must match
+    the trainer's setting (``ivf_train_centroids``)."""
     from universal_importer_duckdb_spark.operators.int_kmeans import (
         int_argmin_dists,
         quantize_np,
         quantize_unit_np,
     )
 
-    C = np.asarray(centroids, dtype=np.int64)
     qz = quantize_unit_np if spherical else quantize_np
+    n = len(vecs)
+    present = np.flatnonzero(vecs.notna().to_numpy())
+    a = np.full(n, -1, dtype=np.int64)
+    dd = np.full(n, -1, dtype=np.int64)
+    qs = [np.empty(0, dtype=np.int64)] * n
+    if len(present):
+        xq = qz(np.stack(vecs.to_numpy()[present]).astype(np.float64))
+        a[present], dd[present] = int_argmin_dists(xq, C)
+        for i, row in zip(present, xq):
+            qs[i] = row
+    return a, dd, qs
 
-    @F.pandas_udf("int")
-    def assign(batch: pd.Series) -> pd.Series:
-        M = qz(
-            np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in batch],
-                dtype=np.float64,
-            )
-        )
-        a, _ = int_argmin_dists(M, C)
-        return pd.Series(a.astype("int32"))
 
-    return assign
+def assign_to_centroids(
+    df: DataFrame,
+    C,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    carry_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one centroid-assignment kernel: an Arrow-batched integer
+    argmin of each vector against a HELD integer centroid matrix (ties
+    to the smaller cluster id), emitting ``(<id_col>, <carry_cols...>,
+    cluster, d2, q)`` — the cluster, the exact integer squared L2 to
+    it, and the quantized vector. Callers that do not need ``q`` drop
+    it. Stateless, so it runs unchanged on a streaming DataFrame.
+
+    The vector is read through :func:`_guarded_vec` at the centroid
+    width, so a narrower row raises. A NULL vector (a document not yet
+    embedded, in the admission-funnel shape) assigns to cluster -1
+    with d2 -1 and an empty q: no kept member lives in cluster -1, so
+    the downstream semantic gate abstains on it by construction. The
+    id and carry columns keep their input names and types."""
+    Cm = np.asarray(C, dtype=np.int64)
+    cols = [id_col, *carry_cols]
+    # project BEFORE the Arrow map: mapInPandas pins its input
+    # columns, so an unpruned frame would ship every column (the
+    # embeddings table's label, at 100 TB the whole row) through
+    # Arrow for nothing
+    df = df.select(
+        *cols, _guarded_vec(vec_col, id_col, Cm.shape[1]).alias("__v")
+    )
+
+    def _assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            a, dd, qs = _assign_batch(pdf["__v"], Cm)
+            out = {c: pdf[c].to_numpy() for c in cols}
+            out.update({"cluster": a, "d2": dd, "q": qs})
+            yield pd.DataFrame(out)
+
+    schema = ", ".join(
+        f"{c} {df.schema[c].dataType.simpleString()}" for c in cols
+    )
+    return df.mapInPandas(
+        _assign, schema=f"{schema}, cluster bigint, d2 bigint, q array<bigint>"
+    )
 
 
 def kmeans_clusters(
@@ -705,56 +741,33 @@ def kmeans_clusters(
     deterministic scaled-integer Lloyd's on a bounded hash-ordered
     sample; every vector then gets ``(cluster, d2)`` — integer argmin
     id (ties to the smaller cluster) and exact integer squared L2
-    distance to its centroid — in one Arrow-batched pass with the
-    centroid matrix in the UDF closure. All-integer output, so the
-    full assignment is hash-exact in the SQL replay
+    distance to its centroid — in one pass of
+    :func:`assign_to_centroids`. A NULL vector gets cluster -1 and
+    d2 -1; the id column keeps its input type. All-integer output, so
+    the full assignment is hash-exact in the SQL replay
     (kmeans_clusters_sql)."""
-    from universal_importer_duckdb_spark.operators.int_kmeans import (
-        int_argmin_dists,
-        quantize_np,
-    )
-
     C = ivf_train_centroids(df, n_clusters, vec_col, id_col, sample_size, iters)
-    return _assign_to_centroids(df, C, vec_col, id_col)
+    return assign_to_centroids(df, C, vec_col, id_col).drop("q")
 
 
-def _assign_to_centroids(
-    df: DataFrame, C, vec_col: str = "embedding", id_col: str = "vec_id"
+def drift_registers(
+    df: DataFrame,
+    C,
+    side: str,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
 ) -> DataFrame:
-    """One Arrow-batched integer argmin pass of ``df`` against a
-    HELD centroid matrix — the assignment kernel shared by
-    kmeans_clusters (train-and-assign) and embedding_ingest_drift
-    (train on at-rest, assign both sides). The id column keeps the
-    caller's name in the output (r10 advice: the old kernel silently
-    renamed it to 'vec_id')."""
-    from universal_importer_duckdb_spark.operators.int_kmeans import (
-        int_argmin_dists,
-        quantize_np,
-    )
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = quantize_np(
-                np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                    dtype=np.float64,
-                )
-            )
-            a, dd = int_argmin_dists(xq, C)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cluster": a.astype("int64"),
-                    "d2": dd,
-                }
-            )
-
-    # project before the Arrow map (mapInPandas pins its input
-    # columns — don't ship label/metadata through Arrow)
-    return df.select(id_col, vec_col).mapInPandas(
-        _assign, schema=f"{id_col} bigint, cluster bigint, d2 bigint"
+    """One side's per-cluster ``(n_<side>, __s_<side>)`` (count, sum
+    d2) aggregate for :func:`drift_report` — shared by the batch drift
+    operator and the streaming twin, where the arriving side's
+    aggregate is the update-mode state."""
+    return (
+        assign_to_centroids(df, C, vec_col, id_col)
+        .groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias(f"n_{side}"),
+            F.sum("d2").cast("bigint").alias(f"__s_{side}"),
+        )
     )
 
 
@@ -788,22 +801,16 @@ def embedding_ingest_drift(
     absent; a side with no members in a cluster reports mean 0 (no
     evidence, the wordless-doc convention):
     ``(cluster, n_at_rest, n_arriving, mean_d2_at_rest,
-    mean_d2_arriving, arriving_milli)``."""
+    mean_d2_arriving, arriving_milli)``. NULL vectors on either side
+    land in cluster -1 with d2 -1, so a cluster -1 row counts the
+    not-yet-embedded arrivals (its mean d2 reads -1)."""
     C = ivf_train_centroids(
         at_rest, n_clusters, vec_col, id_col, sample_size, iters
     )
-
-    def side(df, prefix):
-        return (
-            _assign_to_centroids(df, C, vec_col, id_col)
-            .groupBy("cluster")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias(f"n_{prefix}"),
-                F.sum("d2").cast("bigint").alias(f"__s_{prefix}"),
-            )
-        )
-
-    return drift_report(side(at_rest, "at_rest"), side(arriving, "arriving"))
+    return drift_report(
+        drift_registers(at_rest, C, "at_rest", vec_col, id_col),
+        drift_registers(arriving, C, "arriving", vec_col, id_col),
+    )
 
 
 def drift_report(rest_agg: DataFrame, arriving_agg: DataFrame) -> DataFrame:
@@ -899,23 +906,30 @@ def ivf_topk(
     table the list id is a partition column, so probing is partition
     pruning — the non-probed ~(1-nprobe/n_list) of the corpus is
     never read."""
+    from universal_importer_duckdb_spark.operators.dedup_text import spread_for_compute
     from universal_importer_duckdb_spark.operators.int_kmeans import (
         quantize_unit_np,
     )
 
+    rows = _search_rows(df, vec_col, id_col, len(query_vec))
     C = ivf_train_centroids(
-        df, n_list, vec_col, id_col, sample_size, spherical=True
+        rows, n_list, vec_col, id_col, sample_size, spherical=True
     )
     qq = quantize_unit_np(np.asarray(query_vec, dtype=np.float64))
     qd = ((C - qq[None, :]) ** 2).sum(axis=1, dtype=np.int64)
     probe = sorted(range(len(C)), key=lambda c: (qd[c], c))[:nprobe]
-    assign = ivf_assign_udf(C, spherical=True)
-    from universal_importer_duckdb_spark.operators.dedup_text import spread_for_compute
+    # A scalar Arrow UDF over the shared batch function, not the
+    # assign_to_centroids map: the map also ships the vector and q back
+    # out, and through it the entry measured slower than the parent's
+    # spread (per-entry A/B at sf0.1, medians of 3 interleaved sweeps:
+    # 0.393 s -> 0.536 s, parent spread 0.130 s; a three-way rerun read
+    # parent 0.571 s, map 0.680 s, this UDF 0.647 s).
+    @F.pandas_udf("bigint")
+    def ivf_list(v: pd.Series) -> pd.Series:
+        return pd.Series(_assign_batch(v, C, spherical=True)[0])
 
-    cand = (
-        spread_for_compute(df, id_col)
-        .withColumn("__list", assign(F.col(vec_col)))
-        .filter(F.col("__list").isin(probe))
+    cand = spread_for_compute(rows, id_col).filter(
+        ivf_list(F.col(vec_col)).isin(probe)
     )
     return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
@@ -1156,10 +1170,9 @@ def knn_join_exact(
       pairwise ops use is NOT safe when every vector's norm is
       touched; a defined-order double fold has no rounding step at
       all.
-    """
-    import numpy as np
-    import pandas as pd
 
+    The neighbor and query ids keep the input id type.
+    """
     ref_rows = df.select(id_col, vec_col).collect()
     ref_ids = np.array([r[0] for r in ref_rows], dtype=np.int64)
     ref = np.array([r[1] for r in ref_rows], dtype=np.float64)
@@ -1200,8 +1213,9 @@ def knn_join_exact(
 
     # project before the Arrow map (mapInPandas pins its input
     # columns — don't ship label/metadata through Arrow)
+    id_t = df.schema[id_col].dataType.simpleString()
     cands = df.select(id_col, vec_col).mapInPandas(
-        _candidates, schema="q_id bigint, cand_id bigint, dcos double"
+        _candidates, schema=f"q_id {id_t}, cand_id {id_t}, dcos double"
     )
 
     vd = F.col(vec_col).cast("array<double>")

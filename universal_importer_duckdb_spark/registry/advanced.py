@@ -4486,7 +4486,7 @@ def stream_ingest_drift(spark, sf_dir):
     drained output equals the batch entry however availableNow
     splits the source — the batch oracle applies."""
     from universal_importer_duckdb_spark.operators.similarity import (
-        _assign_to_centroids,
+        drift_registers,
         drift_report,
         ivf_train_centroids,
     )
@@ -4511,15 +4511,10 @@ def stream_ingest_drift(spark, sf_dir):
         f"q_stream_drift_{_STREAM_COUNTER[0]}",
         output_mode="update",
     )
-    rest_agg = (
-        _assign_to_centroids(at_rest, C)
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_at_rest"),
-            F.sum("d2").cast("bigint").alias("__s_at_rest"),
-        )
+    return drift_report(
+        drift_registers(at_rest, C, "at_rest"),
+        finalize_drift_registers(drained),
     )
-    return drift_report(rest_agg, finalize_drift_registers(drained))
 
 
 REGISTRY.update({

@@ -169,9 +169,9 @@ def streaming_multisignal_admission(
     from universal_importer_duckdb_spark.operators.quality_model import (
         quality_model_scores,
     )
-    from universal_importer_duckdb_spark.operators.semdedup import (
-        _assign_with_q,
-        _int_dist2,
+    from universal_importer_duckdb_spark.operators.semdedup import _int_dist2
+    from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
     )
 
     # the SAME stateless fold the batch funnel runs (one definition
@@ -201,7 +201,7 @@ def streaming_multisignal_admission(
             "left",
         )
     )
-    assigned = _assign_with_q(
+    assigned = assign_to_centroids(
         gated,
         centroids,
         id_col="doc_id",

@@ -61,10 +61,12 @@ def streaming_semdedup_ingest(
     """
     from universal_importer_duckdb_spark.operators.semdedup import (
         _admit_against_kept,
-        _assign_with_q,
+    )
+    from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
     )
 
-    assigned = _assign_with_q(arriving, centroids)
+    assigned = assign_to_centroids(arriving, centroids)
     return _admit_against_kept(assigned, kept_q, eps2)
 
 
@@ -80,20 +82,11 @@ def streaming_drift_registers(arriving: DataFrame, centroids) -> DataFrame:
     (finalize_drift_registers), which then join the batch at-rest
     side exactly as in operators/similarity.py::
     embedding_ingest_drift — same verdicts, same oracle."""
-    from pyspark.sql import functions as F
-
     from universal_importer_duckdb_spark.operators.similarity import (
-        _assign_to_centroids,
+        drift_registers,
     )
 
-    return (
-        _assign_to_centroids(arriving, centroids)
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_arriving"),
-            F.sum("d2").cast("bigint").alias("__s_arriving"),
-        )
-    )
+    return drift_registers(arriving, centroids, "arriving")
 
 
 def finalize_drift_registers(drained: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 
 DIM = 8
@@ -77,6 +78,7 @@ def test_topk_paths_share_bad_vector_contract(spark, path):
 @pytest.mark.parametrize("id_type", ["int", "bigint"])
 def test_assignment_null_and_id_type_contract(spark, id_type):
     from universal_importer_duckdb_spark.operators.similarity import (
+        assign_to_centroids,
         embedding_ingest_drift,
         ivf_topk,
         kmeans_clusters,
@@ -94,6 +96,12 @@ def test_assignment_null_and_id_type_contract(spark, id_type):
     assert by_id[null_id] == (-1, -1)
     assert len(by_id) == N_GOOD + 1
     assert all(c >= 0 and d >= 0 for i, (c, d) in by_id.items() if i != null_id)
+
+    # the assignment checks the centroid width, not a query's
+    narrow = _corpus(spark, [(null_id, [0.5] * (DIM // 2))], id_type)
+    C = np.zeros((2, DIM), dtype=np.int64)
+    with pytest.raises(Exception, match=rf"narrower than the centroid dim \({DIM}\)"):
+        assign_to_centroids(narrow, C).collect()
 
     drift = {
         r.cluster: r

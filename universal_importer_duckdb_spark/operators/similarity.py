@@ -7,10 +7,9 @@ Structure:
   ``sign_hamming_topk``, ``ivf_topk``) differ only in how they pick
   candidate rows: a JVM phase-1 score, hyperplane buckets, sign-bit
   Hamming or IVF lists. Each ends in ``cosine_topk``, the one
-  order-defined exact cosine fold and (cosine desc, id) selection.
-  ``matryoshka_recall`` ranks its prefix tiers with the same fold in
-  its own selection (measured faster; see there). Every path reads
-  its vectors through ``_guarded_vec``: a NULL vector is never a
+  order-defined exact cosine fold and (cosine desc, id) selection,
+  as does every prefix tier of ``matryoshka_recall``. Every path
+  filters its rows through ``_vec_fits``: a NULL vector is never a
   candidate, and a row narrower than the query raises.
 - One centroid-assignment kernel, ``assign_to_centroids``
   (Arrow-batched integer argmin), behind k-means, ingest drift,
@@ -77,41 +76,35 @@ def _double_array(xs):
     return F.array(*[F.lit(float(x)) for x in xs])
 
 
-def _guarded_vec(
+def _vec_fits(
     vec_col: str, id_col: str, width: int, what: str = "query dim"
 ):
-    """The one read of an embedding column: ``vec_col`` as
-    array<double>, NULL for a NULL vector, and a per-row error for a
-    vector narrower than ``width``. Unguarded, a narrow row would
-    zip_with-pad with NULLs and fold its score to NULL (sorting last
-    silently), pack a truncated sign signature, or break the numpy
-    stack of an assignment batch."""
+    """The one check on an embedding column: TRUE for a vector at
+    least ``width`` wide, NULL for a NULL vector, and a per-row error
+    for a narrower one. Unchecked, a narrow row would zip_with-pad
+    with NULLs and fold its score to NULL (sorting last silently),
+    pack a truncated sign signature, or break the numpy stack of an
+    assignment batch. It reads only ``size()``: the vector is cast
+    where it is scored, so the check costs nothing per fold."""
     v = F.col(vec_col)
     ragged = F.raise_error(
         F.concat(
             F.lit(f"embedding narrower than the {what} ({width}) for id "),
             F.col(id_col).cast("string"),
         )
-    ).cast("array<double>")
-    # size() of the raw column: the cast runs once, on kept rows only
-    return F.when(F.size(v) >= width, v.cast("array<double>")).when(
-        v.isNotNull(), ragged
-    )
+    ).cast("boolean")
+    return F.when(F.size(v) >= width, F.lit(True)).when(v.isNotNull(), ragged)
 
 
 def _search_rows(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    width: int,
-    what: str = "query dim",
+    df: DataFrame, vec_col: str, id_col: str, width: int
 ) -> DataFrame:
-    """The rows a top-k path may return: a NULL vector is never a
-    candidate, and every other vector is read through
-    :func:`_guarded_vec`."""
-    return df.filter(F.col(vec_col).isNotNull()).withColumn(
-        vec_col, _guarded_vec(vec_col, id_col, width, what)
-    )
+    """The rows a top-k path may read: a NULL vector is never a
+    candidate, and a vector narrower than ``width`` raises
+    (:func:`_vec_fits`). A filter, not a guarded column: Catalyst
+    would push a later candidate filter below the column and copy the
+    guard into every fold of it."""
+    return df.filter(_vec_fits(vec_col, id_col, width))
 
 
 def cosine_topk(
@@ -131,7 +124,8 @@ def cosine_topk(
     candidate frame costs more than it buys; for full-corpus scans
     prefer cosine_topk_two_phase)."""
     rows = _search_rows(df, vec_col, id_col, len(query_vec))
-    score = cosine(F.col(vec_col), _double_array(query_vec))
+    v = F.col(vec_col).cast("array<double>")
+    score = cosine(v, _double_array(query_vec))
     return (
         rows.select(F.col(id_col), *extra_cols, score.alias("cosine"))
         .orderBy(F.desc("cosine"), id_col)
@@ -180,7 +174,7 @@ def cosine_topk_two_phase(
     Results are bit-identical either way (phase 2 alone IS the exact
     scan)."""
     if size_hint is None or size_hint > 4 * k * overfetch:
-        vd = F.col(vec_col)
+        vd = F.col(vec_col).cast("array<double>")
         dscore = _dot_double(vd, _double_array(query_vec)) / F.greatest(
             F.sqrt(_norm2_double(vd)), F.lit(1e-300)
         )
@@ -364,23 +358,12 @@ def matryoshka_recall(
     # [max(dims), len(query_vec)) would pass a max(dims) guard yet
     # NULL-fold in the reference top-k.
     dmax = max(max(dims), len(query_vec))
-    rows = df.filter(F.col(vec_col).isNotNull())
-    vd = _guarded_vec(vec_col, id_col, dmax, "widest tier")
+    rows = df.filter(_vec_fits(vec_col, id_col, dmax, "widest tier"))
 
-    # Each tier keeps its own one-expression selection instead of
-    # ending in cosine_topk: through cosine_topk (a guarded, sliced
-    # frame per tier) the entry measured slower than the parent's
-    # spread — per-entry A/B at sf0.1, 3 interleaved sweeps of 5 runs,
-    # median 0.296 s (sweeps 0.279-0.297) vs 0.319 s; in one session,
-    # four tiers took 0.214 s in this form and 0.224-0.233 s through
-    # cosine_topk.
     def topk_for(d: int) -> DataFrame:
-        c = cosine(F.slice(vd, 1, d), _double_array(query_vec[:d]))
-        return (
-            rows.select(F.col(id_col), c.alias("__c"))
-            .orderBy(F.desc("__c"), id_col)
-            .limit(k)
-            .select(F.lit(d).cast("bigint").alias("dim"), F.col(id_col))
+        tier = rows.select(id_col, F.slice(vec_col, 1, d).alias(vec_col))
+        return cosine_topk(tier, query_vec[:d], k, vec_col, id_col).select(
+            F.lit(d).cast("bigint").alias("dim"), F.col(id_col)
         )
 
     # the full-dim reference IS the widest tier's id set — reuse it
@@ -692,8 +675,8 @@ def assign_to_centroids(
     it, and the quantized vector. Callers that do not need ``q`` drop
     it. Stateless, so it runs unchanged on a streaming DataFrame.
 
-    The vector is read through :func:`_guarded_vec` at the centroid
-    width, so a narrower row raises. A NULL vector (a document not yet
+    The vector is checked by :func:`_vec_fits` at the centroid width,
+    so a narrower row raises. A NULL vector (a document not yet
     embedded, in the admission-funnel shape) assigns to cluster -1
     with d2 -1 and an empty q: no kept member lives in cluster -1, so
     the downstream semantic gate abstains on it by construction. The
@@ -705,7 +688,11 @@ def assign_to_centroids(
     # embeddings table's label, at 100 TB the whole row) through
     # Arrow for nothing
     df = df.select(
-        *cols, _guarded_vec(vec_col, id_col, Cm.shape[1]).alias("__v")
+        *cols,
+        F.when(
+            _vec_fits(vec_col, id_col, Cm.shape[1], "centroid dim"),
+            F.col(vec_col).cast("array<double>"),
+        ).alias("__v"),
     )
 
     def _assign(batches):
@@ -850,7 +837,8 @@ def kmeans_clusters_sql(
     iters: int = 5,
 ) -> str:
     """DuckDB oracle for kmeans_clusters: replay the integer training
-    and the full-table argmin assignment."""
+    and the full-table argmin assignment. A NULL vector stays out of
+    the sample and gets cluster -1 and d2 -1, as in the Spark path."""
     from universal_importer_duckdb_spark.operators.int_kmeans import (
         SAMPLE_SALT,
         kmeans_ctes,
@@ -870,7 +858,8 @@ def kmeans_clusters_sql(
     )
     return f"""
 WITH
-pts0 AS MATERIALIZED (SELECT vec_id AS pid, {dims} FROM embeddings),
+pts0 AS MATERIALIZED (SELECT vec_id AS pid, {dims} FROM embeddings
+                      WHERE embedding IS NOT NULL),
 sampids AS MATERIALIZED (SELECT pid FROM pts0
             ORDER BY {samp_hash}, pid
             LIMIT {sample_size}),
@@ -883,6 +872,9 @@ FROM (
          row_number() OVER (PARTITION BY p.pid
                             ORDER BY {dist_pc}, c.cid) AS rn
   FROM pts0 p JOIN cents c ON TRUE) WHERE rn = 1
+UNION ALL
+SELECT vec_id, CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
+FROM embeddings WHERE embedding IS NULL
 """
 
 
@@ -950,7 +942,8 @@ def ivf_topk_sql(
     assignment, nprobe probe selection, and the order-defined exact
     cosine re-rank + exact-top-k audit. ``sql_dot``/``sql_n2`` are the
     registry's list_reduce fold templates (bit-identical to Spark's
-    F.aggregate folds)."""
+    F.aggregate folds). A NULL vector is never sampled nor a
+    candidate, as in the Spark path."""
     from universal_importer_duckdb_spark.operators.int_kmeans import (
         SAMPLE_SALT,
         kmeans_ctes,
@@ -976,7 +969,8 @@ def ivf_topk_sql(
     n2q = sql_n2.format(a="qv")
     return f"""
 WITH
-pts0 AS MATERIALIZED (SELECT vec_id AS pid, {dims} FROM embeddings WHERE vec_id > 0),
+pts0 AS MATERIALIZED (SELECT vec_id AS pid, {dims} FROM embeddings
+                      WHERE vec_id > 0 AND embedding IS NOT NULL),
 sampids AS MATERIALIZED (SELECT pid FROM pts0
             ORDER BY {samp_hash}, pid
             LIMIT {sample_size}),
@@ -1000,7 +994,8 @@ topk AS (
 exact AS (
   SELECT vec_id FROM (
     SELECT e.vec_id, {dot} / (sqrt({n2v}) * sqrt({n2q})) AS cosine
-    FROM embeddings e, qv_t WHERE e.vec_id > 0)
+    FROM embeddings e, qv_t
+    WHERE e.vec_id > 0 AND e.embedding IS NOT NULL)
   ORDER BY cosine DESC, vec_id LIMIT {k})
 SELECT t.vec_id, t.cosine,
        CASE WHEN x.vec_id IS NULL THEN 0 ELSE 1 END AS in_exact_topk,
